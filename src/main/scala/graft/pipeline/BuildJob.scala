@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Hashers
@@ -23,6 +23,12 @@ import graft.sql.functions.expandAlgorithms
   *    footer bloom + sorted row groups — but sharded across N files.
   *  - `maxRecordsPerFile` bounds file size instead of the reference's
   *    in-RAM 100k batching (build.rs:16), which can't spill.
+  *
+  * A build is one write plus one footer finalize, the Spark counterpart of
+  * the reference's single writer pass (parquet.rs:426-474): the catalog
+  * stats (count, algorithms, sources) are observed on the write itself,
+  * and [[FooterMeta.stamp]] puts the `shaha:*` catalog and, when asked,
+  * the footer bloom into each file's footer with one splice per file.
   */
 object BuildJob {
 
@@ -53,7 +59,9 @@ object BuildJob {
         * each output file (FooterMeta.writeBlooms): the reference CLI's
         * bloom fast-reject (parquet.rs:481-487) and graft's own exact-
         * lookup fast path then work on this db without native-bloom
-        * support. Off by default — one extra pass over the written data.
+        * support. Off by default — it costs one job that scans the
+        * written `hash` column; the bloom rides in the same footer splice
+        * as the catalog.
         */
       footerBloom: Boolean = false
   ) {
@@ -92,8 +100,9 @@ object BuildJob {
   }
 
   /** Build `output` from `words`; returns what was written.
-    * Empty input never creates a database (K3, reference
-    * tests/integration.rs:472-481); appends merge into the existing one.
+    * Input with no non-blank word never creates or clobbers a database
+    * (K3, reference tests/integration.rs:472-481); appends merge into the
+    * existing one.
     */
   def run(
       spark: SparkSession,
@@ -109,14 +118,19 @@ object BuildJob {
       return Result(written = false, records = existingMeta.map(_.totalRecords).getOrElse(0L),
         skippedUpToDate = true)
 
+    // K3: nothing in → no database out. An append onto a db whose catalog
+    // has records writes every one of them back, so only the other builds
+    // look for a non-blank word: a LIMIT-1 scan of the source, no distinct,
+    // digest or shuffle
+    if (!(cfg.append && existingMeta.exists(_.totalRecords > 0)) && !hasWords(words))
+      return Result(written = false, records = 0L)
+
+    val appending = cfg.append && existingMeta.isDefined
+
     val fresh = expand(words, cfg)
     val merged =
-      if (cfg.append && existingMeta.isDefined)
-        merge(spark.read.schema(schema).parquet(output), fresh)
+      if (appending) merge(spark.read.schema(schema).parquet(output), fresh)
       else fresh
-
-    // K3: nothing in → no database out
-    if (merged.isEmpty) return Result(written = false, records = 0L)
 
     val sorted =
       if (cfg.partitionByAlgorithm)
@@ -131,23 +145,29 @@ object BuildJob {
         case None => merged.orderBy("hash") // O1: clusters files+row groups by hash
       }
 
+    // the catalog stats ride on the write itself. Observed above the range
+    // exchange, they are computed in the write's result stage, whose
+    // accumulator updates Spark merges once per partition: neither the
+    // range-sampling job nor a retried shuffle-map task counts a row twice
+    val stats = Observation()
+    val observed = sorted.observe(stats,
+      count(lit(1)).as("n"),
+      collect_set(col("algorithm")).as("algos"),
+      array_sort(array_distinct(flatten(collect_set(col("sources"))))).as("srcs"))
+
     // Appends must fully materialize before overwriting their own input;
     // stage to a temp dir then swap.
-    val stage = if (cfg.append && existingMeta.isDefined) output + "_staging" else output
-    writer(sorted, cfg).parquet(stage)
+    val stage = if (appending) output + "_staging" else output
+    writer(observed, cfg).parquet(stage)
 
     if (stage != output) swap(spark, stage, output)
 
-    val written = spark.read.parquet(output)
-    val stats = written.agg(
-      count(lit(1)).as("n"),
-      collect_set(col("algorithm")).as("algos"),
-      array_sort(array_distinct(flatten(collect_set(col("sources"))))).as("srcs")
-    ).head()
+    val m = stats.get
+    val records = m("n").asInstanceOf[Long]
     val meta = SidecarMeta(
-      totalRecords = stats.getLong(0),
-      algorithms = stats.getSeq[String](1).sorted,
-      sources = stats.getSeq[String](2),
+      totalRecords = records,
+      algorithms = m("algos").asInstanceOf[collection.Seq[String]].toSeq.sorted,
+      sources = m("srcs").asInstanceOf[collection.Seq[String]].toSeq,
       sourceHashes =
         (existingMeta.filter(_ => cfg.append).map(_.sourceHashes).getOrElse(Seq.empty) ++
           contentHash.toSeq).distinct
@@ -155,11 +175,15 @@ object BuildJob {
     SidecarMeta.write(spark, output, meta)
     // K2 write side: stamp the same catalog into each file's footer so the
     // reference CLI's metadata fast path (parquet.rs:152-202) reads graft
-    // output directly, sidecar or no sidecar
-    FooterMeta.write(spark, output, meta)
-    if (cfg.footerBloom) FooterMeta.writeBlooms(spark, output)
-    Result(written = true, records = stats.getLong(0))
+    // output directly, sidecar or no sidecar — with the footer bloom, when
+    // asked for, in the same splice
+    FooterMeta.stamp(spark, output, Some(meta), blooms = cfg.footerBloom)
+    Result(written = true, records = records)
   }
+
+  /** Whether `words` holds a non-blank word: a LIMIT-1 scan. */
+  private[graft] def hasWords(words: Dataset[String]): Boolean =
+    !words.toDF("preimage").filter(length(col("preimage")) > 0).isEmpty
 
   private def writer(df: DataFrame, cfg: Config) = {
     val base = if (cfg.partitionByAlgorithm) df.write.partitionBy("algorithm")

@@ -95,13 +95,11 @@ object Compact {
 
     swapInPlace(spark, db, stage)
 
-    val records = spark.read.schema(BuildJob.schema).parquet(db).count()
-    meta.foreach { m =>
-      SidecarMeta.write(spark, db, m)
-      FooterMeta.write(spark, db, m)
-    }
-    if (hadBlooms) FooterMeta.writeBlooms(spark, db)
-    Result(files.size, dataFiles(spark, db).size, records)
+    // one footer finalize re-stamps the catalog and the blooms together;
+    // the rewritten files' footer row counts give the record count
+    meta.foreach(SidecarMeta.write(spark, db, _))
+    val stamped = FooterMeta.stamp(spark, db, meta, blooms = hadBlooms)
+    Result(files.size, stamped.files, stamped.records)
   }
 
   /** Compact ANY parquet dataset directory to ~`targetBytes` files,

@@ -3,7 +3,7 @@ package graft.pipeline
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.format.{KeyValue, Util}
+import org.apache.parquet.format.{FileMetaData, KeyValue, Util}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
@@ -24,15 +24,19 @@ import scala.jdk.CollectionConverters._
   * automatically.
   *
   * WRITE: Spark's public Parquet writer can't append custom footer KVs, so
-  * after a build this rewrites each file's footer in place — parse the
-  * thrift `FileMetaData`, append the `shaha:*` entries, serialize, splice
-  * (data pages, bloom filters and column-index offsets are untouched:
-  * only the trailing footer + length + magic are replaced, via a
-  * filesystem-API copy so checksum files stay consistent). The reference
-  * CLI's metadata fast path (parquet.rs:152-202) then reads graft output
-  * directly. Each file records ITS OWN row count (the read side sums),
-  * with the dataset-wide algorithm/source lists — same merge semantics in
-  * both directions.
+  * after a build one finalize ([[stamp]]) rewrites each file's footer in
+  * place — parse the thrift `FileMetaData`, append the `shaha:*` catalog
+  * entries and, when asked, the `shaha:bloom_*` footer bloom, serialize,
+  * splice (data pages, bloom filters and column-index offsets are
+  * untouched: only the trailing footer + length + magic are replaced, via
+  * a filesystem-API copy so checksum files stay consistent). A finalize is
+  * one file listing, one footer read per file, at most one distributed
+  * bitmap job over the `hash` column, and one splice per file: on an
+  * object store, where a splice copies the whole object, a bloom-stamped
+  * build rewrites each data file once. The reference CLI's metadata fast
+  * path (parquet.rs:152-202) then reads graft output directly. Each file
+  * records ITS OWN row count (the read side sums), with the dataset-wide
+  * algorithm/source lists — same merge semantics in both directions.
   *
   * Footer reads/rewrites happen driver-side, one small ranged read (plus,
   * for writes, one streaming copy) per file, fanned out on the JVM's
@@ -44,6 +48,7 @@ object FooterMeta {
   private val KeyAlgorithms = "shaha:algorithms"
   private val KeySources = "shaha:sources"
   private val KeySourceHashes = "shaha:source_hashes"
+  private val CatalogKeys = Set(KeyTotal, KeyAlgorithms, KeySources, KeySourceHashes)
   private val Magic = "PAR1".getBytes("US-ASCII")
 
   /** Stats from `shaha:*` footer metadata of a parquet file or a directory
@@ -86,10 +91,8 @@ object FooterMeta {
     * replaced).
     */
   def write(spark: SparkSession, db: String, meta: SidecarMeta): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(db)
-    val fs = root.getFileSystem(conf)
-    inParallel(parquetFiles(fs, root))(p => appendFooterKv(fs, p, meta))
+    stamp(spark, db, Some(meta), blooms = false)
+    ()
   }
 
   /** Per-file footer blooms (`shaha:bloom_*`) for every parquet file under
@@ -159,54 +162,89 @@ object FooterMeta {
   /** Compute and stamp a reference-format footer bloom
     * (`shaha:bloom_bitmap`/`_keys`/`_items`) onto every data file under
     * `db`, so the reference CLI's bloom fast-reject (parquet.rs:481-487)
-    * works on graft output. Per-file blooms are built DISTRIBUTED — each
-    * task folds its rows into per-file partial bitmaps keyed by
-    * `input_file_name()`, OR-merged by file — so the pass scales with
-    * executors; only the final ⌈bits/8⌉-byte bitmaps reach the driver
-    * (one per file), spliced footer-side in parallel. Returns the number
-    * of files stamped.
+    * works on graft output. The `shaha:*` catalog keys are left untouched.
+    * Returns the number of files stamped; a 0-row file gets no bloom.
     */
   def writeBlooms(
       spark: SparkSession, db: String,
       minCapacity: Long = 100000, fp: Double = 0.01
-  ): Int = {
+  ): Int = stamp(spark, db, None, blooms = true, minCapacity, fp).bloomed
+
+  /** What one [[stamp]] found and wrote: the data files, their summed
+    * footer `num_rows`, and how many of them got a footer bloom.
+    */
+  private[pipeline] final case class Stamped(files: Int, records: Long, bloomed: Int)
+
+  /** The footer finalize of a build or a compaction: the `shaha:*` catalog
+    * (when `meta` is given) and the footer bloom (when `blooms`) go into
+    * each file's footer in ONE splice per file.
+    *
+    * Each bloom is sized from its file's footer `num_rows` (at least
+    * `minCapacity`), so no counting job runs. The bitmaps are built
+    * DISTRIBUTED — each task folds its rows into per-file partial bitmaps
+    * keyed by `input_file_name()`, OR-merged by file — so the pass scales
+    * with executors; only the final ⌈bits/8⌉-byte bitmaps reach the
+    * driver, one per non-empty file.
+    */
+  private[pipeline] def stamp(
+      spark: SparkSession, db: String, meta: Option[SidecarMeta], blooms: Boolean,
+      minCapacity: Long = 100000, fp: Double = 0.01
+  ): Stamped = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(db)
     val fs = root.getFileSystem(conf)
-    if (parquetFiles(fs, root).isEmpty) return 0
+    val footers = inParallel(parquetFiles(fs, root))(p => p -> readFooter(fs, p))
+    val bitmaps =
+      if (blooms && footers.nonEmpty)
+        bloomBitmaps(spark, db,
+          footers.map { case (p, f) => p.toString -> f.fmd.getNum_rows }.toMap,
+          minCapacity, fp)
+      else Map.empty[String, FooterBloom]
+    inParallel(footers) { case (p, f) =>
+      val updates = meta.toSeq.flatMap(catalogKv(_, f.fmd.getNum_rows)) ++
+        bitmaps.get(p.toString).toSeq.flatMap(_.toKv)
+      if (updates.nonEmpty)
+        writeFooter(fs, p, f, if (meta.isDefined) CatalogKeys else Set.empty, updates)
+    }
+    Stamped(footers.size, footers.map(_._2.fmd.getNum_rows).sum, bitmaps.size)
+  }
+
+  /** Footer blooms of the files under `db` that hold rows, keyed by path
+    * string; `rows` maps each file to its footer `num_rows`.
+    */
+  private def bloomBitmaps(
+      spark: SparkSession, db: String, rows: Map[String, Long],
+      minCapacity: Long, fp: Double
+  ): Map[String, FooterBloom] = {
     import org.apache.spark.sql.functions.{col, input_file_name}
-    val df = spark.read.schema(BuildJob.schema).parquet(db)
-      .select(input_file_name().as("f"), col("hash"))
-    // sizing pass: one row per FILE reaches the driver, never data rows
-    val counts = df.groupBy("f").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val params: Map[String, (Int, (Long, Long, Long, Long))] = counts.map {
+    val params: Map[String, (Int, (Long, Long, Long, Long))] = rows.map {
       case (f, n) =>
         val proto = FooterBloom.forCapacity(math.max(n, minCapacity),
-          seed = new Path(new java.net.URI(f)).getName, fp)
+          seed = new Path(f).getName, fp)
         f -> (proto.bitmap.length, proto.keys)
     }
     val bc = spark.sparkContext.broadcast(params)
     val writeK = FooterBloom.kForFp(fp)
-    val merged = df.rdd.mapPartitions { it =>
-      val local = scala.collection.mutable.HashMap.empty[String, FooterBloom]
-      it.foreach { row =>
-        val f = row.getString(0)
-        val (len, keys) = bc.value(f)
-        local.getOrElseUpdate(f,
-            new FooterBloom(new Array[Byte](len), keys, 1L, writeK))
-          .add(row.getAs[Array[Byte]](1))
-      }
-      local.iterator.map { case (f, b) => f -> b.bitmap }
-    }.reduceByKey { (a, b) =>
-      var i = 0; while (i < a.length) { a(i) = (a(i) | b(i)).toByte; i += 1 }; a
-    }.collect()
-    inParallel(merged.toSeq) { case (fUri, bytes) =>
-      val p = new Path(new java.net.URI(fUri))
-      val (_, keys) = params(fUri)
-      val bloom = new FooterBloom(bytes, keys, counts(fUri))
-      spliceFooter(fs, p)(_ => bloom.toKv)
-    }.length
+    val merged = spark.read.schema(BuildJob.schema).parquet(db)
+      .select(input_file_name().as("f"), col("hash"))
+      .rdd.mapPartitions { it =>
+        // keyed by input_file_name()'s URI string; the bitmap goes out
+        // under the listed path string the driver keyed `params` by
+        val local = scala.collection.mutable.HashMap.empty[String, (String, FooterBloom)]
+        it.foreach { row =>
+          local.getOrElseUpdate(row.getString(0), {
+            val f = new Path(new java.net.URI(row.getString(0))).toString
+            val (len, keys) = bc.value(f)
+            f -> new FooterBloom(new Array[Byte](len), keys, 1L, writeK)
+          })._2.add(row.getAs[Array[Byte]](1))
+        }
+        local.valuesIterator.map { case (f, b) => f -> b.bitmap }
+      }.reduceByKey { (a, b) =>
+        var i = 0; while (i < a.length) { a(i) = (a(i) | b(i)).toByte; i += 1 }; a
+      }.collect()
+    merged.map { case (f, bytes) =>
+      f -> new FooterBloom(bytes, params(f)._2, rows(f), writeK)
+    }.toMap
   }
 
   private def parquetFiles(fs: FileSystem, root: Path): Seq[Path] = {
@@ -233,20 +271,41 @@ object FooterMeta {
     tasks.map(_.join())
   }
 
-  /** Splice this writer's catalog entries into one file's footer. */
-  private def appendFooterKv(fs: FileSystem, p: Path, meta: SidecarMeta): Unit =
-    spliceFooter(fs, p,
-      removeKeys = Set(KeyTotal, KeyAlgorithms, KeySources, KeySourceHashes)) { fmd =>
-      Seq(
-        KeyTotal -> fmd.getNum_rows.toString,
-        KeyAlgorithms -> meta.algorithms.mkString(","),
-        KeySources -> meta.sources.mkString(",")
-      ) ++ (if (meta.sourceHashes.nonEmpty)
-        Seq(KeySourceHashes -> meta.sourceHashes
-          .map(s => "\"" + SidecarMeta.escape(s) + "\"")
-          .mkString("[", ",", "]"))
-      else Seq.empty)
-    }
+  /** This writer's catalog entries for one file of `numRows` rows. */
+  private def catalogKv(meta: SidecarMeta, numRows: Long): Seq[(String, String)] =
+    Seq(
+      KeyTotal -> numRows.toString,
+      KeyAlgorithms -> meta.algorithms.mkString(","),
+      KeySources -> meta.sources.mkString(",")
+    ) ++ (if (meta.sourceHashes.nonEmpty)
+      Seq(KeySourceHashes -> meta.sourceHashes
+        .map(s => "\"" + SidecarMeta.escape(s) + "\"")
+        .mkString("[", ",", "]"))
+    else Seq.empty)
+
+  /** One file's parsed footer and the byte offset it starts at. */
+  private final case class Footer(start: Long, fmd: FileMetaData)
+
+  private def readFooter(fs: FileSystem, p: Path): Footer = {
+    val len = fs.getFileStatus(p).getLen
+    require(len > 12, s"$p: too small to be a parquet file")
+    val in = fs.open(p)
+    try {
+      in.seek(len - 8)
+      val tail = new Array[Byte](8)
+      in.readFully(tail)
+      require(java.util.Arrays.equals(tail.drop(4), Magic),
+        s"$p: missing PAR1 magic (encrypted or not parquet)")
+      val footerLen = (tail(0) & 0xff) | ((tail(1) & 0xff) << 8) |
+        ((tail(2) & 0xff) << 16) | ((tail(3) & 0xff) << 24)
+      val start = len - 8L - footerLen
+      require(start >= 4, s"$p: implausible footer length $footerLen")
+      in.seek(start)
+      val buf = new Array[Byte](footerLen)
+      in.readFully(buf)
+      Footer(start, Util.readFileMetaData(new ByteArrayInputStream(buf)))
+    } finally in.close()
+  }
 
   /** Splice key/value entries into one file's footer. The new file is
     * byte-identical up to the footer; offsets inside the footer stay valid
@@ -254,31 +313,18 @@ object FooterMeta {
     * the update set are replaced; everything else is preserved.
     */
   private[pipeline] def spliceFooter(fs: FileSystem, p: Path, removeKeys: Set[String] = Set.empty)(
-      updates: org.apache.parquet.format.FileMetaData => Seq[(String, String)]
+      updates: FileMetaData => Seq[(String, String)]
   ): Unit = {
-    val len = fs.getFileStatus(p).getLen
-    require(len > 12, s"$p: too small to be a parquet file")
-    val in = fs.open(p)
-    val (footerStart, fmd) =
-      try {
-        in.seek(len - 8)
-        val tail = new Array[Byte](8)
-        in.readFully(tail)
-        require(java.util.Arrays.equals(tail.drop(4), Magic),
-          s"$p: missing PAR1 magic (encrypted or not parquet)")
-        val footerLen = (tail(0) & 0xff) | ((tail(1) & 0xff) << 8) |
-          ((tail(2) & 0xff) << 16) | ((tail(3) & 0xff) << 24)
-        val start = len - 8L - footerLen
-        require(start >= 4, s"$p: implausible footer length $footerLen")
-        in.seek(start)
-        val buf = new Array[Byte](footerLen)
-        in.readFully(buf)
-        (start, Util.readFileMetaData(new ByteArrayInputStream(buf)))
-      } finally in.close()
+    val f = readFooter(fs, p)
+    writeFooter(fs, p, f, removeKeys, updates(f.fmd))
+  }
 
+  /** [[spliceFooter]]'s write half, for a footer already read. */
+  private def writeFooter(fs: FileSystem, p: Path, f: Footer, removeKeys: Set[String],
+      fresh: Seq[(String, String)]): Unit = {
+    val Footer(footerStart, fmd) = f
     // replace stale entries for the keys being written (reference formats:
     // decimal / comma-joined / JSON string array / base64), keep the rest
-    val fresh = updates(fmd)
     val replaced = removeKeys ++ fresh.map(_._1)
     val kept = Option(fmd.getKey_value_metadata).map(_.asScala.toSeq)
       .getOrElse(Seq.empty).filterNot(e => replaced.contains(e.getKey))

@@ -62,8 +62,11 @@ object StreamingBuild {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         import spark.implicits._
-        BuildJob.run(spark, batch.select("w").as[String], output,
-          cfg.copy(append = true))
+        val words = batch.select("w").as[String]
+        // a batch with no word (watermark-only, or every word dropped as a
+        // duplicate) must not rewrite the database through the append swap
+        if (BuildJob.hasWords(words))
+          BuildJob.run(spark, words, output, cfg.copy(append = true))
         ()
       }
       .start()

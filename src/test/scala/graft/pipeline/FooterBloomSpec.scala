@@ -113,6 +113,62 @@ class FooterBloomSpec extends AnyFunSuite with SparkTestBase {
     assert(prefix.count() == 1)
   }
 
+  test("each file's footer: bloom_items = total_records = num_rows, no false " +
+      "negatives; 0-row files get no bloom; re-stamping is idempotent and keeps " +
+      "foreign keys") {
+    import spark.implicits._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val out = java.nio.file.Files.createTempDirectory("graft-bloom-files")
+      .toString + "/db"
+    val words = (0 until 600).map(i => f"pf-$i%04d").toDS()
+    val cfg = BuildJob.Config(algorithms = Seq("md5", "sha256"), numFiles = Some(3),
+      footerBloom = true)
+    assert(BuildJob.run(spark, words, out, cfg).written)
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(out)
+    val fs = root.getFileSystem(conf)
+    def files = fs.listStatus(root).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith(".")).toSeq
+    /** Each file's (footer num_rows, footer key/values). */
+    def footers: Map[String, (Long, Map[String, String])] = files.map { p =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      try p.getName -> (r.getRecordCount,
+        r.getFooter.getFileMetaData.getKeyValueMetaData.asScala.toMap)
+      finally r.close()
+    }.toMap
+
+    val built = footers
+    assert(built.size == 3)
+    for ((name, (rows, kv)) <- built) {
+      assert(rows > 0 && kv("shaha:total_records").toLong == rows, name)
+      assert(kv(FooterBloom.KeyItems).toLong == rows, name)
+      val bloom = FooterBloom.fromKv(kv).get
+      val hashes = spark.read.parquet(s"$out/$name").select("hash").as[Array[Byte]]
+        .collect()
+      assert(hashes.length == rows && hashes.forall(bloom.mightContain), name)
+    }
+
+    // a foreign footer key and a 0-row file, then stamp again
+    val tagged = files.head
+    FooterMeta.spliceFooter(fs, tagged)(_ => Seq("other:key" -> "kept"))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      BuildJob.schema).coalesce(1).write.mode("append").parquet(out)
+    val before = footers
+    val empty = (before.keySet -- built.keySet).toSeq
+    assert(empty.size == 1 && before(empty.head)._1 == 0)
+    FooterMeta.write(spark, out, SidecarMeta.read(spark, out).get)
+    assert(FooterMeta.writeBlooms(spark, out) == 3)
+    val after = footers
+    assert(after(tagged.getName)._2.get("other:key").contains("kept"))
+    for (name <- built.keySet) assert(after(name) == before(name), name)
+    val (_, emptyKv) = after(empty.head)
+    assert(emptyKv.get("shaha:total_records").contains("0"))
+    assert(FooterBloom.fromKv(emptyKv).isEmpty && !emptyKv.contains(FooterBloom.KeyItems))
+    assert(FooterMeta.read(spark, out).get.totalRecords == 1200)
+  }
+
   test("bloom pruning on a hive algorithm= layout keeps the partition column") {
     import spark.implicits._
     val out = java.nio.file.Files.createTempDirectory("graft-bloom-hive")

@@ -4,8 +4,9 @@ import java.io.File
 import java.net.URI
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
@@ -48,6 +49,17 @@ class Mock3aFileSystem extends RawLocalFileSystem {
   override def getFileStatus(f: Path): FileStatus = fix(super.getFileStatus(f))
   override def listStatus(f: Path): Array[FileStatus] =
     super.listStatus(f).map(fix)
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    if (f.getName.endsWith(".footer.tmp")) Mock3aFileSystem.footerCopies.add(f.toString)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object Mock3aFileSystem {
+  /** Every `.footer.tmp` copy created: one per remote footer splice. */
+  val footerCopies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
 
 /** End-to-end object-store semantics over the mock scheme: the staging
@@ -135,6 +147,27 @@ class ObjectStoreSpec extends AnyFunSuite with SparkTestBase {
         graft.core.Hashers("md5").hash("delta".getBytes("UTF-8")))
       assert(QueryJob.run(spark, out, QueryJob.Params(hex2)).collect()
         .map(_.getString(1)).toSeq == Seq("delta"))
+    }
+  }
+
+  test("a bloom-stamped build copies each data file once to stamp its footer") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    withMockFs { out =>
+      val cfg = BuildJob.Config(algorithms = Seq("md5", "sha256"), numFiles = Some(3),
+        bloomNdv = 1000L, footerBloom = true)
+      assert(BuildJob.run(spark, (0 until 300).map(i => s"copy-$i").toDS, out, cfg)
+        .records == 600)
+      val root = new Path(out)
+      val files = root.getFileSystem(spark.sessionState.newHadoopConf())
+        .listStatus(root).map(_.getPath)
+        .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
+      val copies = Mock3aFileSystem.footerCopies.asScala.filter(_.startsWith(out)).toSeq
+      assert(files.length == 3)
+      // the catalog and the bloom went into one splice, so one copy per file
+      assert(copies.sorted == files.map(p => s"$out/.${p.getName}.footer.tmp").toSeq.sorted)
+      assert(FooterMeta.read(spark, out).get.totalRecords == 600)
+      assert(FooterMeta.readBlooms(spark, out).forall(_._2.isDefined))
     }
   }
 

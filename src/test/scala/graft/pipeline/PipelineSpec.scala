@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.core.{Blake3, Hashers}
@@ -78,6 +79,110 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     // missing db → zeroed stats (integration.rs:462-469)
     val stats = InfoJob.run(spark, db)
     assert(stats == InfoJob.Stats(0, Seq.empty, Seq.empty, 0))
+  }
+
+  /** Every regular file under `dir`: relative path → (bytes, mtime). */
+  private def snapshot(dir: String): Map[String, (Seq[Byte], Long)] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try {
+      walk.iterator.asScala.filter(Files.isRegularFile(_)).map { f =>
+        root.relativize(f).toString ->
+          (Files.readAllBytes(f).toSeq, Files.getLastModifiedTime(f).toMillis)
+      }.toMap
+    } finally walk.close()
+  }
+
+  test("blank-only input leaves an existing db byte-identical and creates " +
+      "nothing at a new path (K3)") {
+    val db = tmp() + "/db"
+    val cfg = BuildJob.Config(Seq("md5", "sha256"), sourceName = "w", footerBloom = true)
+    assert(BuildJob.run(spark, wordsDs("hello", "world"), db, cfg).written)
+    val before = snapshot(db)
+    val blank = BuildJob.run(spark, wordsDs("", "", ""), db, cfg)
+    assert(!blank.written && blank.records == 0)
+    assert(snapshot(db) == before, "a blank-only build must not touch the db")
+
+    val fresh = tmp() + "/db"
+    assert(!BuildJob.run(spark, wordsDs(""), fresh, cfg.copy(append = true)).written)
+    assert(!Files.exists(java.nio.file.Paths.get(fresh)))
+  }
+
+  test("the catalog observed on the write equals a re-scan of the written db " +
+      "(fresh, append, partitionByAlgorithm, numFiles; AQE on and off)") {
+    def rescan(db: String): SidecarMeta = {
+      val r = spark.read.parquet(db).agg(count(lit(1)),
+        array_sort(collect_set(col("algorithm"))),
+        array_sort(array_distinct(flatten(collect_set(col("sources")))))).head()
+      SidecarMeta(r.getLong(0), r.getSeq[String](1), r.getSeq[String](2), Nil)
+    }
+    def check(label: String, db: String, r: BuildJob.Result, want: SidecarMeta): Unit = {
+      assert(r.written && r.records == want.totalRecords, label)
+      assert(rescan(db) == want, label)
+      assert(SidecarMeta.read(spark, db).get.copy(sourceHashes = Nil) == want, label)
+      assert(FooterMeta.read(spark, db).get.copy(sourceHashes = Nil) == want, label)
+    }
+    val a = (0 until 400).map(i => f"obs-$i%04d")
+    val b = a.drop(300) ++ (0 until 100).map(i => f"new-$i%04d")
+    val cfg = BuildJob.Config(Seq("md5", "sha256"), sourceName = "a")
+    val algos = Seq("md5", "sha256")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try for (on <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.adaptive.enabled", on)
+      val db = tmp() + "/db"
+      check(s"fresh, AQE $on", db, BuildJob.run(spark, wordsDs(a: _*), db, cfg),
+        SidecarMeta(800, algos, Seq("a"), Nil))
+      check(s"append, AQE $on", db, BuildJob.run(spark, wordsDs(b: _*), db,
+        cfg.copy(sourceName = "b", append = true)),
+        SidecarMeta(1000, algos, Seq("a", "b"), Nil))
+      val hive = tmp() + "/db"
+      check(s"partitionByAlgorithm, AQE $on", hive, BuildJob.run(spark, wordsDs(a: _*),
+        hive, cfg.copy(partitionByAlgorithm = true)), SidecarMeta(800, algos, Seq("a"), Nil))
+      val three = tmp() + "/db"
+      check(s"numFiles = 3, AQE $on", three, BuildJob.run(spark, wordsDs(a: _*),
+        three, cfg.copy(numFiles = Some(3))), SidecarMeta(800, algos, Seq("a"), Nil))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("job-count gate: a fresh 2-algorithm bloom-stamped build runs 6 Spark jobs") {
+    // Pass by pass, with AQE on (the session default):
+    //   1    K3: LIMIT-1 scan of the word list for a non-blank word
+    //   2-5  the write: distinct shuffle stage, range-partitioner sampling,
+    //        range shuffle stage, then the write's result stage, which also
+    //        observes the catalog stats (count, algorithms, sources)
+    //   6    footer bloom bitmaps over the written `hash` column
+    // No job re-scans the written db for stats or counts rows to size the
+    // blooms, and no emptiness check runs the distinct.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "build-job-audit"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // count only this thread's job group: stray jobs from other specs on
+    // the shared session must not count
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(j.stageInfos.map(_.name).mkString(" | "))
+    }
+    val dir = tmp()
+    val list = java.nio.file.Paths.get(dir, "words.txt")
+    Files.write(list, (0 until 500).map(i => s"job-$i").asJava)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "one fresh build")
+    try {
+      assert(BuildJob.run(spark, spark.read.textFile(list.toString), dir + "/db",
+        BuildJob.Config(Seq("md5", "sha256"), footerBloom = true)).records == 1000)
+      // the listener bus is asynchronous: wait until the count settles
+      var seen = -1
+      while (seen != jobs.size) { seen = jobs.size; Thread.sleep(500) }
+      assert(jobs.size <= 6, jobs.toArray.mkString(s"${jobs.size} jobs:\n", "\n", ""))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
   }
 
   test("incremental build skips an already-ingested source (build.rs:113-125)") {

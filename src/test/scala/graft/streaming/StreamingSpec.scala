@@ -59,6 +59,34 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     } finally query.stop()
   }
 
+  test("a micro-batch with no new word leaves the database untouched") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-stream-empty").toString
+    val db = s"$dir/db"
+    def listing(): Map[String, Long] = {
+      val walk = Files.walk(java.nio.file.Paths.get(db))
+      try walk.iterator.asScala.filter(Files.isRegularFile(_))
+        .map(f => f.toString -> Files.getLastModifiedTime(f).toMillis).toMap
+      finally walk.close()
+    }
+    val input = MemoryStream[String]
+    val query = StreamingBuild.run(input.toDS(), db, s"$dir/ckpt",
+      BuildJob.Config(Seq("sha256"), sourceName = "stream"))
+    try {
+      input.addData("hello", "world")
+      query.processAllAvailable()
+      val before = listing()
+      // a duplicate (dropped by the dedup state) and a blank: an empty batch
+      input.addData("hello", "")
+      query.processAllAvailable()
+      assert(query.lastProgress.numInputRows == 2, "the batch must have run")
+      assert(listing() == before, "an empty batch must not rewrite the db")
+      assert(InfoJob.run(spark, db).totalRecords == 2)
+    } finally query.stop()
+  }
+
   test("streaming build recovers dedup state from the checkpoint on restart") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
