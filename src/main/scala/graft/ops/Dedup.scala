@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *    near-dups. Signature build is explode+groupBy (2 narrow shuffles).
   *  - n-gram Jaccard: inverted-index candidate join on rare shingles.
   *
-  * The hash family is lexicographic-min over md5(seed‖shingle) — engine-
-  * portable (any SQL engine with md5 reproduces it bit-for-bit), which is
-  * what lets the DuckDB oracle verify these distributed ops exactly.
+  * The hash family is lexicographic-min over md5(seed‖shingle): any SQL
+  * engine with md5 reproduces it bit-for-bit, which is what lets the
+  * DuckDB oracle verify these distributed ops exactly.
   */
 object Dedup {
 
@@ -69,26 +69,16 @@ object Dedup {
   }
 
   /** Per-doc MinHash signature columns m0..m{k-1}:
-    * m_s = min over shingles of md5(s ‖ '|' ‖ shingle).
-    *
-    * The k digests are computed once per DISTINCT shingle (vocabulary-sized
-    * work) and joined back to the doc×shingle pairs, instead of re-hashing
-    * every occurrence — at corpus scale occurrences ≫ vocabulary. Then one
-    * groupBy with k min aggregates (single shuffle, map-side partials).
-    */
-  def minhashSignatures(sh: DataFrame, k: Int): DataFrame =
-    minhashSignaturesWith(sh, k, portable = true)
-
-  /** [[minhashSignatures]] computed straight from doc text by the
+    * m_s = min over the doc's word n-gram shingles of
+    * md5(s ‖ '|' ‖ shingle), computed straight from doc text by the
     * graft_word_minhash codegen kernel — one pass per doc, ZERO
-    * shuffles on the signature side (the gram explode, vocabulary
-    * distinct() exchange, vocabulary join-back and k-min aggregation
-    * exchange all disappear), bit-identical md5 lanes
-    * (WordMinhashSpec pins the kernel against the original
-    * formulation; min over occurrences ≡ min over the distinct gram
-    * set). Docs with fewer than n tokens produce no signature row,
-    * exactly as the original `filter(size >= n)` drops them before
-    * the groupBy.
+    * shuffles on the signature side (no gram explode, vocabulary
+    * distinct() exchange, join-back or k-min aggregation exchange),
+    * bit-identical md5 lanes (WordMinhashSpec pins the kernel against
+    * the explode formulation; min over occurrences ≡ min over the
+    * distinct gram set). Docs with fewer than n tokens produce no
+    * signature row, exactly as [[shingles]]' `filter(size >= n)` drops
+    * them.
     */
   def minhashSignaturesKernel(docs: DataFrame, k: Int,
       shingleSize: Int = 3): DataFrame = {
@@ -102,57 +92,6 @@ object Dedup {
         (0 until k).map(s => col("_ms").getItem(s).as(s"m$s")): _*)
   }
 
-  /** `portable = true` → md5-derived hash family (any engine replays it —
-    * what the DuckDB oracle checks). `portable = false` → xxhash64 with
-    * seed = permutation index: whole-stage-codegen, no string building,
-    * ~an order of magnitude cheaper per shingle — the production default
-    * when cross-engine replay isn't required. Same LSH semantics.
-    */
-  def minhashSignaturesWith(sh: DataFrame, k: Int, portable: Boolean,
-      side: DataFrame => DataFrame = graft.util.Partitioning.indexSide
-  ): DataFrame = {
-    def family(s: Int): Column =
-      if (portable) md5(concat(lit(s.toString), lit("|"), col("w")))
-      else xxhash64(lit(s), col("w")) // numeric min; banding concat coerces
-    if (portable) {
-      // md5 is the expensive part: compute the k digests once per
-      // DISTINCT shingle (vocabulary-sized work) and join back — at a
-      // typical ~50× occurrence/vocabulary ratio the two extra shuffles
-      // cost less than 50× the md5s
-      val vocabHashes = sh.select("w").distinct().select(
-        col("w") +: (0 until k).map(s => family(s).as(s"h$s")): _*)
-      // the vocabulary is corpus-scaled — partitioned join unless the
-      // caller proved the corpus small (see Partitioning.indexSideFor)
-      sh.join(side(vocabHashes), "w")
-        .groupBy("doc_id")
-        .agg(
-          min(col("h0")).as("m0"),
-          (1 until k).map(s => min(col(s"h$s")).as(s"m$s")): _*
-        )
-    } else
-      // xxhash64 is cheaper than a shuffle row: hash every occurrence
-      // directly (min over occurrences ≡ min over distinct) — ZERO
-      // joins, one map-side-combined groupBy, full codegen
-      sh.groupBy("doc_id")
-        .agg(
-          min(family(0)).as("m0"),
-          (1 until k).map(s => min(family(s)).as(s"m$s")): _*
-        )
-  }
-
-  /** LSH banding: rows-per-band consecutive signature components hashed to
-    * one band signature; docs sharing any band signature are candidates.
-    * Returns (i, j) with i < j, distinct.
-    *
-    * Bands are melted to (doc_id, band, sig) long format and self-joined
-    * ONCE on (band, sig) — a per-band join union would re-run the whole
-    * signature pipeline per band. The tiny melted table is persisted so
-    * the self-join's two sides don't recompute it either. Buckets larger
-    * than `maxBucket` are dropped (with a logged count) before the
-    * self-join — see [[LshGuard.capBuckets]]; the default cap is far above
-    * any honest bucket at tested scales, so results are unchanged except
-    * under degenerate boilerplate floods.
-    */
   /** Signature table → (doc_id, band, sig) long format: `rowsPerBand`
     * consecutive components hashed to one band signature per row.
     */
@@ -168,6 +107,19 @@ object Dedup {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
+  /** LSH banding: rows-per-band consecutive signature components hashed to
+    * one band signature; docs sharing any band signature are candidates.
+    * Returns (i, j) with i < j, distinct.
+    *
+    * Bands are melted to (doc_id, band, sig) long format and self-joined
+    * ONCE on (band, sig) — a per-band join union would re-run the whole
+    * signature pipeline per band. The tiny melted table is persisted so
+    * the self-join's two sides don't recompute it either. Buckets larger
+    * than `maxBucket` are dropped (with a logged count) before the
+    * self-join — see [[LshGuard.capBuckets]]; the default cap is far above
+    * any honest bucket at tested scales, so results are unchanged except
+    * under degenerate boilerplate floods.
+    */
   def lshCandidates(
       sigs: DataFrame, k: Int, rowsPerBand: Int, maxBucket: Int = 5000,
       side: DataFrame => DataFrame = graft.util.Partitioning.indexSide
@@ -290,8 +242,9 @@ object Dedup {
         col("containment_j") >= threshold)
   }
 
-  /** Full MinHash-LSH near-dup pipeline. */
-  /** `pruneBp`: length-prefilter basis points for the verify (see
+  /** Full MinHash-LSH near-dup pipeline: word-kernel signatures →
+    * [[lshCandidates]] → exact-Jaccard [[verifyJaccard]].
+    * `pruneBp`: length-prefilter basis points for the verify (see
     * [[verifyJaccard]]) — defaults to the op's own `threshold` cut;
     * callers that apply a LOWER op threshold but cut the result at a
     * known bp downstream (the bp-exact queries pass threshold = 0 and
@@ -300,8 +253,7 @@ object Dedup {
   def minhashLsh(
       docs: DataFrame, k: Int = 8, rowsPerBand: Int = 2,
       threshold: Double = 0.8, shingleSize: Int = 3,
-      portable: Boolean = true, maxBucket: Int = 5000,
-      pruneBp: Long = -1L
+      maxBucket: Int = 5000, pruneBp: Long = -1L
   ): DataFrame = {
     val prune = if (pruneBp >= 0L) pruneBp else (threshold * 10000).toLong
     // the shingle set feeds signatures AND the verify joins (4 consumers);
@@ -314,21 +266,17 @@ object Dedup {
     //    caches race into re-running the candidate pipeline — 2× worse;
     //  - eager localCheckpoint(cands) + semi-join (r4): race-free, but
     //    no measurable win at 1×-10× corpus (within the ±0.8 s run
-    //    variance at sf0.1; --minhash-scale x10 ~11 s both ways) — the
-    //    checkpoint barrier serializes candidates before verify and the
-    //    extra join cancels the smaller-side savings.
+    //    variance at sf0.1; a 10× disjoint-copy corpus ~11 s both
+    //    ways) — the checkpoint barrier serializes candidates before
+    //    verify and the extra join cancels the smaller-side savings.
     // The cached sh is simply cheap to re-read; callers that already hold
     // materialized candidates (incrementalMinhash) still pre-filter.
     val side = graft.util.Partitioning.indexSideFor(docs)
-    // r10: the portable (md5) signature path runs as the
-    // graft_word_minhash kernel straight off the doc text — the cached
-    // gram frame now serves only the verify (the kernel's one extra
-    // corpus scan is far cheaper than the vocab distinct + join +
-    // groupBy exchanges it removes); the xxhash64 family keeps its
-    // zero-join aggregate form
-    val sigs =
-      if (portable) minhashSignaturesKernel(docs, k, shingleSize)
-      else minhashSignaturesWith(sh, k, portable = false, side)
+    // signatures come from the graft_word_minhash kernel straight off
+    // the doc text — the cached gram frame serves only the verify (the
+    // kernel's one extra corpus scan is far cheaper than the vocab
+    // distinct + join + groupBy exchanges it removes)
+    val sigs = minhashSignaturesKernel(docs, k, shingleSize)
     val cands = lshCandidates(sigs, k, rowsPerBand, maxBucket, side)
     verifyJaccard(cands, sh, side, prune)
       .filter(col("jaccard") >= threshold)
@@ -340,7 +288,7 @@ object Dedup {
     * re-running history×history.
     *
     * `historySigs` is the persisted artifact (doc_id, m0..m{k-1} — what
-    * [[minhashSignatures]] emits and a production pipeline stores
+    * [[minhashSignaturesKernel]] emits and a production pipeline stores
     * alongside the corpus). Only the new shard is shingled and signed;
     * history contributes its stored signatures to the banding join, and
     * candidate pairs keep only those touching ≥1 new doc. Verification
@@ -356,7 +304,7 @@ object Dedup {
   def incrementalMinhash(
       newDocs: DataFrame, historyDocs: DataFrame, historySigs: DataFrame,
       k: Int = 8, rowsPerBand: Int = 2, threshold: Double = 0.8,
-      shingleSize: Int = 3, portable: Boolean = true, maxBucket: Int = 5000
+      shingleSize: Int = 3, maxBucket: Int = 5000
   ): DataFrame = {
     // shard shingles feed the signature pipeline AND the verify union; a
     // scoped persist would be released by the first eager checkpoint
@@ -371,10 +319,7 @@ object Dedup {
     // eagerly checkpoint the tiny (docs × bands)-row band table once and
     // fan out from the materialized copy.
     val melted =
-      bandMelt(
-        if (portable) minhashSignaturesKernel(newDocs, k, shingleSize)
-        else minhashSignaturesWith(shNew, k, portable = false,
-          graft.util.Partitioning.indexSideFor(newDocs)), k, rowsPerBand)
+      bandMelt(minhashSignaturesKernel(newDocs, k, shingleSize), k, rowsPerBand)
         .withColumn("_new", lit(true))
         .unionByName(bandMelt(historySigs, k, rowsPerBand)
           .withColumn("_new", lit(false)))
@@ -765,17 +710,15 @@ object Dedup {
       .distinct()
   }
 
-  /** [[minhashLsh]] on character shingles — same signature/banding/
-    * verify machinery, different feature space. The scale arguments
-    * transfer verbatim; the char vocabulary is larger (≈ chars per doc
-    * vs tokens per doc), which the portable-vs-xxhash64 family trade
-    * and the vocabulary-distinct hashing already account for.
+  /** [[minhashLsh]] on character shingles — same md5 family and
+    * banding/verify machinery, different feature space. The scale
+    * arguments transfer verbatim; the char vocabulary is larger
+    * (≈ chars per doc vs tokens per doc).
     */
   def minhashLshChars(
       docs: DataFrame, k: Int = 8, rowsPerBand: Int = 2,
       threshold: Double = 0.8, n: Int = 5,
-      portable: Boolean = true, maxBucket: Int = 5000,
-      pruneBp: Long = -1L
+      maxBucket: Int = 5000, pruneBp: Long = -1L
   ): DataFrame = {
     val prune = if (pruneBp >= 0L) pruneBp else (threshold * 10000).toLong
     val side = graft.util.Partitioning.indexSideFor(docs)
@@ -791,20 +734,17 @@ object Dedup {
     // md5 family, bit-identical signatures (CharMinhashSpec pins the
     // kernel against the explode→distinct→groupBy formulation); the
     // gram frame `sh` survives only for the exact-Jaccard verify.
-    val sigs =
-      if (portable) {
-        import org.apache.spark.sql.graftshim.GraftShim
-        val ct = col("_ct")
-        graft.util.Partitioning.fanOut(docs)
-          .select(col("doc_id"),
-            regexp_replace(col("text"), WhitespaceClass, "").as("_ct"))
-          .filter(length(ct) >= n)
-          .select(col("doc_id"), GraftShim.column(
-            graft.sql.expressions.CharMinhash(
-              GraftShim.expression(ct), n, k)).as("_ms"))
-          .select(col("doc_id") +:
-            (0 until k).map(s => col("_ms").getItem(s).as(s"m$s")): _*)
-      } else minhashSignaturesWith(sh, k, portable = false, side)
+    import org.apache.spark.sql.graftshim.GraftShim
+    val ct = col("_ct")
+    val sigs = graft.util.Partitioning.fanOut(docs)
+      .select(col("doc_id"),
+        regexp_replace(col("text"), WhitespaceClass, "").as("_ct"))
+      .filter(length(ct) >= n)
+      .select(col("doc_id"), GraftShim.column(
+        graft.sql.expressions.CharMinhash(
+          GraftShim.expression(ct), n, k)).as("_ms"))
+      .select(col("doc_id") +:
+        (0 until k).map(s => col("_ms").getItem(s).as(s"m$s")): _*)
     val cands = lshCandidates(sigs, k, rowsPerBand, maxBucket, side)
     verifyJaccard(cands, sh, side, prune)
       .filter(col("jaccard") >= threshold)

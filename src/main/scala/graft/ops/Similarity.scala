@@ -123,16 +123,6 @@ object Similarity {
       }: _*)
     }: _*)
 
-  /** Random-hyperplane LSH bucket signature for one hash table: one bit
-    * per plane = sign of the ±1-weighted component sum.
-    */
-  def lshBucket(vec: Column, dim: Int, nPlanes: Int, table: Int = 0): Column =
-    concat((0 until nPlanes).map { p =>
-      val proj = element_at(
-        matVec(vec, signMatrix(Seq(table), nPlanes, dim), nPlanes), p + 1)
-      when(proj >= 0, lit("1")).otherwise(lit("0"))
-    }: _*)
-
   /** IVF seed centroids: the first `nCells` vectors by id — deterministic,
     * collected to the driver and broadcast as literals so cell assignment
     * is a narrow argmax projection over codegen dots.

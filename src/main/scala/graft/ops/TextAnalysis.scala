@@ -51,12 +51,6 @@ object TextAnalysis {
     "zh" -> Seq("的", "是", "了", "在", "不")
   )
 
-  def markerDensity(text: Column, markers: Seq[String]): Column = {
-    val toks = tokens(text)
-    size(filter(toks, t => markers.map(m => t === m).reduce(_ || _)))
-      .cast("double") / size(toks)
-  }
-
   /** Language ID from a PRE-MATERIALIZED token array column. `toks` must be
     * a bound attribute (`.withColumn("_toks", tokens(col("text")))`), not an
     * inline expression: HOF lambdas re-evaluate their closed-over input per
@@ -73,11 +67,6 @@ object TextAnalysis {
     val top = greatest(best: _*)
     when(top.getField("d") >= 0.01, top.getField("lang")).otherwise(lit("und"))
   }
-
-  /** Convenience single-column form — only for one-off expressions; bulk
-    * paths should materialize tokens and use [[langIdFromTokens]].
-    */
-  def langId(text: Column): Column = langIdFromTokens(tokens(text))
 
   /** (doc_id, gram, c): per-document n-gram occurrence counts, NOT
     * deduplicated (unlike [[Dedup.shingles]], which distincts per doc —
@@ -1002,7 +991,7 @@ object TextAnalysis {
       .withColumnRenamed("_rlen", "len_ref")
   }
 
-  /** Unicode SCRIPT profile — the triage [[langId]]'s token heuristic
+  /** Unicode SCRIPT profile — the triage [[langIdFromTokens]]' token heuristic
     * can't do on non-whitespace scripts: per doc, character counts for
     * the five big writing systems (Latin, Cyrillic, Han, Arabic, Greek —
     * Unicode script properties, identical `\p{Script}` semantics in

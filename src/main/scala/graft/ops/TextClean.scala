@@ -656,9 +656,8 @@ object TextClean {
             array_join(slice(col("_t"), i, lit(n)), " ").as("g"))))
         .otherwise(array().cast("array<struct<pos:long,g:string>>"))
     // NOT persisted: the gram frames are corpus-gram-sized (caching
-    // them spills and went superlinear at x40 in Profile
-    // --repetition-scale); the explodes recompute from the cached base
-    // (cheap codegen).
+    // them spills and went superlinear on a 40× disjoint-copy corpus);
+    // the explodes recompute from the cached base (cheap codegen).
     def occOf(ns: Range) =
       ns.map(n => base.select(col("_id"), lit(n).as("_n"),
           explode(gramsOf(n)).as("_o"))

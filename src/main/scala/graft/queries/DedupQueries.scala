@@ -367,7 +367,7 @@ object DedupQueries extends QueryGroup {
 
     // Incremental near-dedup: docs with doc_id % 5 = 0 are "today's
     // shard"; the rest are history contributing only their STORED
-    // signatures (minhashSignatures output) to the banding join. The
+    // signatures (minhashSignaturesKernel output) to the banding join. The
     // contract — full-run pairs restricted to those touching a new doc —
     // is exactly what the oracle expresses as a WHERE over the full chain.
     "q_dedup_incremental" -> QueryDef(
@@ -596,13 +596,9 @@ object DedupQueries extends QueryGroup {
     // Near-dup pairs → connected components → survivor per cluster.
     // Spark runs iterative min-label propagation; the oracle resolves
     // components with a recursive transitive-closure CTE over the same
-    // pairs. r10: back on the PORTABLE md5 family — the exact family
-    // the oracle replays — via the zero-shuffle graft_word_minhash
-    // kernel, which closed the hash-cost gap that had motivated r8's
-    // xxhash64 switch (measured ≈ equal). The r9-flagged family
-    // coupling (banding recall is family-dependent; a generative spec
-    // PROVED the verified pair sets can split on light-edit twins) is
-    // eliminated outright: Spark now computes the oracle's own family.
+    // pairs. Signatures are the md5 family the oracle replays, via the
+    // zero-shuffle graft_word_minhash kernel, so Spark and the oracle
+    // band and verify the same pair set.
     "q_dedup_clusters" -> QueryDef(
       (s, d) => {
         val pairs = Dedup.minhashLsh(Tables.documents(s, d))

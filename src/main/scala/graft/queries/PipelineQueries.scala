@@ -33,13 +33,8 @@ object PipelineQueries extends QueryGroup {
           .groupBy("content_key").agg(min("doc_id").as("doc_id"))
           .join(keyed, Seq("content_key", "doc_id"))
         // stage 4: near-dedup — drop the higher id of each verified pair.
-        // r10: back on the PORTABLE md5 family — the exact family the
-        // oracle replays — via the zero-shuffle graft_word_minhash
-        // kernel, which closed the hash-cost gap behind r9's xxhash64
-        // switch (measured ≈ equal). The family coupling the r9 verdict
-        // flagged (a generative spec PROVED the verified pair sets can
-        // split on light-edit twins under different banding recall) is
-        // eliminated: Spark computes the oracle's own family.
+        // Signatures are the md5 family the oracle replays, via the
+        // zero-shuffle graft_word_minhash kernel.
         val dupJ = Dedup.minhashLsh(docs)
           .select(col("j").as("doc_id")).distinct()
         val survivors = keepExact.join(dupJ, Seq("doc_id"), "left_anti")

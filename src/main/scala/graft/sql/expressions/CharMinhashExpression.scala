@@ -7,8 +7,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen-capable k-lane MinHash over character n-grams — the hot
-  * kernel of [[graft.ops.Dedup.minhashLshChars]]'s portable (md5)
-  * signature path. For an already-whitespace-stripped text it slides
+  * kernel of [[graft.ops.Dedup.minhashLshChars]]'s md5 signature
+  * path. For an already-whitespace-stripped text it slides
   * the n-code-point gram window once and keeps, per lane s ∈ [0, k),
   * the minimum md5 digest of `s ‖ "|" ‖ gram` — exactly the family the
   * SQL formulation computes per exploded gram

@@ -7,8 +7,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen-capable k-lane MinHash over word n-grams — the
-  * [[CharMinhash]] twin for [[graft.ops.Dedup.minhashSignatures]]'s
-  * portable (md5) word path. For raw document text it keeps, per lane
+  * [[CharMinhash]] twin behind [[graft.ops.Dedup.minhashSignaturesKernel]],
+  * the md5 word signature path. For raw document text it keeps, per lane
   * s ∈ [0, k), the minimum md5 digest of `s ‖ "|" ‖ gram` over every
   * n-token gram, where tokens are the `split(text, " ")` fields
   * (single-space regex, limit −1: consecutive spaces yield EMPTY
@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Pinned bit-identical to the explode→distinct→vocab-md5→join→groupBy
   * formulation by WordMinhashSpec.
   *
-  * What it buys (r10): the portable signature pipeline — gram explode,
+  * What it buys (r10): the md5 signature pipeline — gram explode,
   * vocabulary `distinct()` exchange, the vocabulary join back, and the
   * k-min aggregation exchange — collapses to a per-row projection:
   * zero shuffles on the signature side at any scale. The r8 finding

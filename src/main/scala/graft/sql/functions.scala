@@ -50,10 +50,6 @@ object functions {
       hashCol >= lit(prefix) && hashCol <= lit(upperBound(prefix))
   }
 
-  /** Exact-match predicate for a full digest (bloom + min/max eligible). */
-  def hashEqualsPredicate(hashCol: Column, hexDigest: String): Column =
-    hashCol === lit(hexToBytes(hexDigest))
-
   private def upperBound(prefix: Array[Byte]): Array[Byte] = {
     // prefix ‖ 0xFF…0xFF padded to the longest digest length (64 = sha512)
     val out = new Array[Byte](64)

@@ -1,1069 +1,58 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Dev utility: isolate per-stage costs of the shingle pipeline and any
-  * registered query (`runMain graft.tools.Profile [queryName ...]`).
+/** Dev utility: time registered queries cold, then warm, each forced
+  * through the noop sink (`runMain graft.tools.Profile <query ...>`).
+  *
+  * The tables come from `SPARK_GRAFT_SF_DIR` (default
+  * [[graft.Bench.DefaultSfDir]]), so a corpus-growth curve is
+  * `python3 tools/scale_gen.py <src> <out> <R>` followed by
+  * `SPARK_GRAFT_SF_DIR=<out> ... Profile <query ...>`. The session is
+  * `local[SPARK_GRAFT_CPUS]` (default: this machine's processors) with
+  * `graft.Bench`'s confs, so Profile times the plans Bench times.
+  * Formatted plans: [[PlanDump]]; hash-db build and lookup layers:
+  * perfbench's `hashdb_build` / `hashdb_lookup` with `--trace 1`.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val code = run(args.toSeq, System.err)
+    if (code != 0) sys.exit(code)
+  }
+
+  private[graft] def run(queries: Seq[String], err: java.io.PrintStream): Int = {
+    val unknown = queries.filterNot(graft.queries.Registry.all.contains)
+    if (queries.isEmpty || unknown.nonEmpty) {
+      err.println("usage: Profile <query ...>" +
+        (if (unknown.isEmpty) "" else s" (unknown: ${unknown.mkString(", ")})"))
+      2
+    } else {
+      time(queries)
+      0
+    }
+  }
+
+  private def time(queries: Seq[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", graft.Bench.DefaultSfDir)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.autoBroadcastJoinThreshold", "32m")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("GRAFT_PROFILE_LOG", "ERROR"))
-
-    def time(tag: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      f
-      println(f"TIME $tag ${(System.nanoTime() - t0) / 1e9}%.3f")
-    }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    if (args.headOption.contains("--ivf-profile")) {
-      import graft.ops.Similarity
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      time("0-seed")(Similarity.ivfCentroids(emb, 16): Unit)
-      time("1-train-iter1")(Similarity.kmeansCentroids(emb, 16, 1): Unit)
-      time("2-train-iter3")(Similarity.kmeansCentroids(emb, 16, 3): Unit)
-      val q = emb.filter(col("vec_id") < 50)
-      time("3-search-only")(noop(Similarity.ivfTopK(q, emb, k = 5,
-        nCells = 16, nProbe = 4, lloydIters = 0)))
-      time("4-full")(noop(Similarity.ivfTopK(q, emb, k = 5,
-        nCells = 16, nProbe = 4, lloydIters = 3)))
-    } else if (args.headOption.contains("--minhash-scale")) {
-      // corpus-growth curve for the LSH near-dedup path: m disjoint copies
-      // (every token suffixed per copy, so vocabularies don't collide and
-      // the workload is honestly m×; cross-copy pairs are impossible)
-      import graft.ops.Dedup
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 2, 5, 10)
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1~c$k").as("text"))
-        }.reduce(_ unionByName _)
-        time(s"minhash-scale-x$m")(noop(Dedup.minhashLsh(docs)))
-      }
-    } else if (args.headOption.contains("--dedup2-scale")) {
-      // corpus-growth curves for the round-5 candidate generators:
-      // winnowing fingerprint matching, prefix-filter set-similarity,
-      // and char-shingle minhash — same disjoint-copy harness as
-      // --minhash-scale (suffixed tokens, so work is honestly m× and
-      // cross-copy pairs are impossible)
-      import graft.ops.{Dedup, Substring}
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 2, 5, 10)
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1~c$k").as("text"))
-        }.reduce(_ unionByName _)
-        time(s"winnow-x$m")(noop(
-          Substring.winnowMatches(docs, k = 5, w = 4, maxDf = 8,
-            minShared = 3L)))
-        time(s"prefix-filter-x$m")(noop(
-          Dedup.prefixFilterJaccard(docs, thresholdBp = 8000)))
-        // char-shingle minhash on THIS corpus is measured at x1 only:
-        // the 31-word vocabulary makes every doc maximally self-similar
-        // at char level (4.3% of ALL pairs become genuine mid-Jaccard
-        // candidates — the documented banding-dial pathology, not a
-        // plan defect), so scaling THIS fixture measures the pathology,
-        // not the op. The honest growth curve runs on the diverse
-        // hex-chain corpus of --charminhash-scale. x1 is kept as the
-        // pathology anchor, in both the default 4×2 banding and the
-        // diversity-compensated 2×4 config SCALING.md prescribes here.
-        if (m == 1) {
-          time(s"char-minhash-x$m")(noop(
-            Dedup.minhashLshChars(docs, threshold = 0.0, portable = false)))
-          time(s"char-minhash-r4-x$m")(noop(
-            Dedup.minhashLshChars(docs, rowsPerBand = 4, threshold = 0.0,
-              portable = false)))
-        } else
-          println(s"SKIP char-minhash-x$m: degenerate 31-word-vocab " +
-            "fixture (see --charminhash-scale for the fair curve)")
-      }
-    } else if (args.headOption.contains("--charminhash-scale")) {
-      // growth curve for char-shingle minhash on a DIVERSE char-gram
-      // corpus: each doc's text is 5 chained md5 digests of its id,
-      // BASE64-coded (~120 chars ⇒ ~116 char-5-grams, nearly all
-      // corpus-unique — the natural-language diversity regime the
-      // banding defaults target, which the 31-word dedup2 fixture
-      // inverts), plus a planted near-dup for 10% of docs (one char
-      // appended) so banding and verify do real work at every scale.
-      // Base64, NOT hex: the hex alphabet's 5-gram space is 16⁵ = 1M,
-      // which the corpus SATURATES past ~x10 (every gram df ≫ 1 ⇒
-      // band collisions between unrelated docs grow quadratically —
-      // measured as a 4×-per-doubling step and a broadcast-build OOM
-      // at x40). 64⁵ ≈ 1.1e9 keeps grams diverse through x40+.
-      import graft.ops.Dedup
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 2, 5, 10)
-      val baseN = 5000L
-      mults.foreach { m =>
-        val text = concat((1 to 5).map(i =>
-          base64(unhex(md5(concat(col("doc_id").cast("string"),
-            lit(s"|$i")))))): _*)
-        val docs = spark.range(baseN * m)
-          .select(col("id").as("doc_id")).select(col("doc_id"), text.as("text"))
-        val planted = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-          .select((col("doc_id") + lit(1000000000L)).as("doc_id"),
-            concat(col("text"), lit("z")).as("text"))
-        val corpus = docs.unionByName(planted).localCheckpoint(true)
-        time(s"charminhash-scale-x$m")(noop(
-          Dedup.minhashLshChars(corpus, threshold = 0.8, portable = false)))
-      }
-    } else if (args.headOption.contains("--semdedup-scale")) {
-      // growth curves for SemDeDup: m perturbed corpus copies (per-copy
-      // deterministic sin offset of ±0.02/dim, so the m copies of each
-      // base vector form one true duplicate group at cosine ≥ 0.9 —
-      // the re-crawl/re-encode mode where duplicate-group size grows
-      // WITH the corpus). Two arms per m: fixed nCells (within-cell
-      // pairwise work Σ|cell|² grows m² — the quadratic fence made
-      // visible), nCells ∝ m (constant cell occupancy — the
-      // documented knob, per-unit cost stays flat; recall trade is
-      // cross-cell misses, reported via grouped_docs), and nCells ∝ √n
-      // (the nCells·n + n²/nCells optimum SCALING.md prescribes —
-      // assignment and pair work grow at the SAME n^1.5 rate, the arm
-      // that wins at every scale).
-      import graft.ops.Similarity
-      val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 2, 5, 10)
-      mults.foreach { m =>
-        val corpus = (0 until m).map { cpy =>
-          base.select((col("vec_id") + lit(cpy * 10000000L)).as("vec_id"),
-            (if (cpy == 0) col("embedding")
-             else transform(col("embedding"), (x, i) =>
-               (x + sin(col("vec_id") * 0.37 + i * 1.13 + cpy * 2.7) * 0.02)
-                 .cast("float"))).as("embedding"))
-        }.reduce(_ unionByName _).localCheckpoint(true)
-        def run(tag: String, cells: Int): Unit = {
-          val t0 = System.nanoTime()
-          val r = Similarity.semanticDedup(corpus, nCells = cells,
-              minCosBp = 9000L)
-            .agg(count(lit(1)).as("g"), sum("cluster_size").as("d"))
-            .collect()(0)
-          val (ng, nd) =
-            (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-          println(f"SEMDEDUP-SCALE x$m $tag cells=$cells groups=$ng " +
-            f"grouped_docs=$nd time=${(System.nanoTime() - t0) / 1e9}%.2f")
-        }
-        run("fixed", 16)
-        // the ∝m arm's assignment term is m² total — measured to x10
-        // (where it already dominates); past that it only re-measures
-        // the known quadratic, so the harness stops paying for it
-        if (m <= 10) run("scaled", 16 * m)
-        // √n arm: 2000·m vectors at sf0.1 ⇒ 16·√m keeps cells ≈ √n
-        // (16 ≈ √(2000)/2.8 anchors the x1 arm to the fixed one)
-        run("sqrt", math.max(16, (16 * math.sqrt(m)).round.toInt))
-      }
-    } else if (args.headOption.contains("--lsh-skew")) {
-      // planted-skew stress for the banding self-join: at each m the
-      // corpus is m disjoint-vocabulary copies of the sf docs EXCEPT
-      // that every 10th doc of EVERY copy is replaced by one shared
-      // boilerplate text (no copy suffix) — so 10% of the whole corpus
-      // (500·m docs) shares every band signature: the degenerate bucket
-      // in its worst form. Arms: unguarded (cap above any bucket) pays
-      // the k² candidate blowup + quadratic verify; guarded (cap 1000)
-      // drops the bucket inside the query (lazy observed metric, no
-      // extra job) and stays corpus-linear. Identical content is the
-      // EXACT dedup pass's job — dropping it from the near-dup
-      // candidate join loses nothing a correct pipeline needs.
-      import graft.ops.Dedup
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val boiler = Seq.fill(8)(
-        "subscribe newsletter banner cookie policy accept terms privacy")
-        .mkString(" ")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 2, 4)
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            when(pmod(col("doc_id"), lit(10)) === 0, lit(boiler))
-              .otherwise(regexp_replace(col("text"), "(\\S+)", s"$$1~c$k"))
-              .as("text"))
-        }.reduce(_ unionByName _).localCheckpoint(true)
-        time(s"lsh-skew-x$m-guarded-cap1000")(noop(
-          Dedup.minhashLsh(docs, portable = false, maxBucket = 1000)))
-        time(s"lsh-skew-x$m-unguarded")(noop(
-          Dedup.minhashLsh(docs, portable = false, maxBucket = Int.MaxValue)))
-      }
-    } else if (args.headOption.contains("--recall-scale")) {
-      // LSH-recall audit (q_dedup_lsh_recall shape) at m× corpus, two
-      // arms: SHARED — one persisted shingle frame feeds both candidate
-      // generators via prefixFilterJaccardOn (what the query does) —
-      // vs INDEP — each generator re-explodes the corpus itself (what a
-      // naive composition would do). The delta is the measured value of
-      // the composition point; both arms end in the same one-row audit.
-      import graft.ops.Dedup
-      import org.apache.spark.sql.DataFrame
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 5, 10)
-      def auditRow(truth: DataFrame, lsh: DataFrame): DataFrame =
-        truth.select(col("i"), col("j"), lit(1L).as("_t"))
-          .join(lsh.select(col("i"), col("j"), lit(1L).as("_l")),
-            Seq("i", "j"), "full_outer")
-          .agg(sum(coalesce(col("_t"), lit(0L))).as("n_truth"),
-            sum(coalesce(col("_l"), lit(0L))).as("n_lsh"),
-            sum(when(col("_t").isNotNull && col("_l").isNotNull, 1L)
-              .otherwise(0L)).as("n_both"))
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1~c$k").as("text"))
-        }.reduce(_ unionByName _).localCheckpoint(true)
-        time(s"recall-shared-x$m") {
-          val side = graft.util.Partitioning.indexSideFor(docs)
-          val sh = graft.util.AutoUnpersist.persistScoped(
-            Dedup.shingles(docs, 3))
-          noop(auditRow(
-            Dedup.prefixFilterJaccardOn(sh, 8000, side),
-            Dedup.verifyJaccard(
-              Dedup.lshCandidates(
-                Dedup.minhashSignaturesWith(sh, 8, portable = true, side),
-                8, 2, 5000, side),
-              sh, side).filter(col("jaccard") >= 0.8)))
-        }
-        time(s"recall-indep-x$m")(noop(auditRow(
-          Dedup.prefixFilterJaccard(docs, 8000),
-          Dedup.minhashLsh(docs))))
-      }
-    } else if (args.headOption.contains("--cutspans-scale")) {
-      // corpus-growth curve for ExactSubstr span removal: disjoint
-      // copies (suffixed tokens) so repeated windows stay within-copy
-      // and the window/frequency/cut work is honestly m×
-      import graft.ops.Substring
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 5, 10)
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1~c$k").as("text"))
-        }.reduce(_ unionByName _)
-        time(s"cutspans-x$m")(noop(
-          Substring.cutRepeatedSpans(docs, n = 8, minRep = 2)))
-      }
-    } else if (args.headOption.contains("--jsd-scale")) {
-      // corpus-growth curve for the snapshot-drift gate: m disjoint
-      // copies (suffixed tokens → vocabulary AND corpus both scale m×,
-      // the op's two cost axes); sides overlap like real snapshots
-      import graft.ops.TextAnalysis
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 10, 40)
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1~c$k").as("text"))
-        }.reduce(_ unionByName _).localCheckpoint(true)
-        val a = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-        val b = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-        time(s"jsd-x$m")(noop(TextAnalysis.jsDivergence(a, b)))
-      }
-    } else if (args.headOption.contains("--repetition-scale")) {
-      // repetitionRules growth: m disjoint corpus copies, each with a
-      // per-copy token suffix so the (doc, n, gram) table grows with
-      // the corpus (the worst case — shared vocab would dedupe). The
-      // claim under test: linear wall growth — gram volume dominates,
-      // all downstream stages are doc-keyed.
-      import graft.ops.TextClean
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select("doc_id", "text")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 10, 40)
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1~c$k").as("text"))
-        }.reduce(_ unionByName _).localCheckpoint(true)
-        time(s"repetition-x$m")(noop(TextClean.repetitionRules(docs)))
-      }
-    } else if (args.headOption.contains("--eval-scale")) {
-      // generation-eval family growth: m disjoint corpus copies through
-      // bleu / chrF / rougeL on the standard corruption fixture. The
-      // claim under test: linear wall growth — pairs score independently
-      // (gram explodes + pair-keyed joins for bleu/chrF; a pure per-row
-      // fold for rougeL).
-      import graft.ops.TextAnalysis
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select("doc_id", "text")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 4, 16)
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1~c$k").as("text"))
-        }.reduce(_ unionByName _)
-          .withColumn("toks", TextAnalysis.tokens(col("text")))
-          .withColumn("ref_toks", slice(col("toks"), 1, 40))
-          .withColumn("cand_toks",
-            transform(sequence(lit(1), least(size(col("toks")), lit(36))),
-              i => when(pmod(i, lit(9)) === 0, lit("the"))
-                .otherwise(element_at(col("toks"), i))))
-          .withColumn("cand_text", array_join(col("cand_toks"), " "))
-          .withColumn("ref_text", array_join(col("ref_toks"), " "))
-          .localCheckpoint(true)
-        time(s"bleu-x$m")(noop(TextAnalysis.bleu(
-          docs.select(col("doc_id"), col("cand_toks"), col("ref_toks")),
-          "doc_id")))
-        time(s"chrf-x$m")(noop(TextAnalysis.chrF(
-          docs.select(col("doc_id"), col("cand_text"), col("ref_text")),
-          "doc_id")))
-        time(s"rougeL-x$m")(noop(TextAnalysis.rougeL(
-          docs.select(col("doc_id"), col("cand_toks"), col("ref_toks")),
-          "doc_id")))
-      }
-    } else if (args.headOption.contains("--corpusstats-scale")) {
-      // round-8 family growth: m disjoint corpus copies (tokens suffixed
-      // per copy → vocab honestly m×) through vocabGrowth / burstiness /
-      // ngramNovelty / pairedPermTest, and m event copies (types suffixed)
-      // through changepoint. Claims under test: all corpus-linear — each
-      // collapses to bounded-domain state (buckets / top-k / deciles /
-      // reps / per-key hour counts).
-      import graft.ops.{CorpusStats, DataQuality, TextAnalysis, TimeSeries}
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select("doc_id", "text")
-      val ev = graft.util.Tables.events(spark, sfDir)
-        .select("event_type", "ts_ns")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 4, 16)
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1~c$k").as("text"))
-        }.reduce(_ unionByName _).localCheckpoint(true)
-        time(s"vocab-growth-x$m")(noop(
-          CorpusStats.vocabGrowth(docs, "doc_id", "text", 10)))
-        time(s"burstiness-x$m")(noop(
-          CorpusStats.burstiness(docs, "doc_id", "text", 8, 50)))
-        time(s"novelty-x$m")(noop(CorpusStats.ngramNovelty(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 1),
-          docs.filter(pmod(col("doc_id"), lit(2)) === 0),
-          "doc_id", "text", 3)))
-        val pairs = docs.select(col("doc_id"),
-          (least(size(TextAnalysis.tokens(col("text"))), lit(500)) -
-            lit(2) * least(size(array_distinct(
-              TextAnalysis.tokens(col("text")))), lit(250)))
-            .cast("long").as("delta"))
-        time(s"perm-test-x$m")(noop(
-          DataQuality.pairedPermTest(pairs, "doc_id", "delta", 200)))
-        time(s"dct-hash-x$m")(noop(graft.ops.Multimodal.dctHashWide(
-          graft.ops.Multimodal.synthesize(docs))))
-        val evm = (0 until m).map { k =>
-          ev.select(concat(col("event_type"), lit(s"~c$k")).as("event_type"),
-            col("ts_ns"))
-        }.reduce(_ unionByName _).localCheckpoint(true)
-        val hours = evm.select(col("event_type"),
-            expr("ts_ns div 3600000000000").as("h"))
-          .groupBy("event_type", "h").agg(count(lit(1)).as("c"))
-        time(s"changepoint-x$m")(noop(
-          TimeSeries.changepoint(hours, "event_type", "h", "c")))
-      }
-    } else if (args.headOption.contains("--epoch-scale")) {
-      // range-partitioned-sort growth for epochShuffle: m disjoint
-      // corpus copies; the claim under test is linear wall growth (the
-      // global permutation is shard-local sorts over hash-uniform
-      // ranges — no sampled partitioner, no skew, no global exchange
-      // beyond the hash shuffle itself)
-      import graft.ops.DataSelect
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select("doc_id", "source")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 10, 40)
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            col("source"))
-        }.reduce(_ unionByName _).localCheckpoint(true)
-        time(s"epoch-shuffle-x$m")(noop(
-          DataSelect.epochShuffle(docs, epoch = 1, nShards = 32)))
-      }
-    } else if (args.headOption.contains("--ann-scale")) {
-      // recall-at-scale curve for the ANN paths: m disjoint corpus copies,
-      // each perturbed per-dimension (deterministic sin offset, cast back
-      // to float) so copies are near but not identical in cosine space —
-      // the honest hard case for bucketed ANN. recall@10 is measured
-      // against the exact brute-force top-k on the SAME scaled corpus.
-      import graft.ops.Similarity
-      val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val k = 10
-      Seq(1, 2, 5, 10).foreach { m =>
-        val corpus = (0 until m).map { cpy =>
-          base.select((col("vec_id") + lit(cpy * 10000000L)).as("vec_id"),
-            (if (cpy == 0) col("embedding")
-             else transform(col("embedding"), (x, i) =>
-               (x + sin(col("vec_id") * 0.37 + i * 1.13 + cpy * 2.7) * 0.05)
-                 .cast("float"))).as("embedding"))
-        }.reduce(_ unionByName _)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = corpus.count()
-        val queries = corpus.filter(col("vec_id") < 50)
-        val truth = Similarity.bruteForceTopK(queries, corpus, k)
-          .select("query_id", "cand_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nTruth = truth.count()
-        def recall(tag: String, ann: => org.apache.spark.sql.DataFrame): Unit = {
-          val t0 = System.nanoTime()
-          val hits = ann.select("query_id", "cand_id")
-            .join(truth, Seq("query_id", "cand_id")).count()
-          println(f"ANN-SCALE x$m n=$n $tag recall@$k=${hits.toDouble / nTruth}%.3f " +
-            f"time=${(System.nanoTime() - t0) / 1e9}%.2f")
-        }
-        // optional knob overrides: --ann-scale [nPlanes nTables nProbe overfetch]
-        val nPlanes = args.lift(1).map(_.toInt).getOrElse(8)
-        val nTables = args.lift(2).map(_.toInt).getOrElse(8)
-        val nProbe = args.lift(3).map(_.toInt).getOrElse(4)
-        val overfetch = args.lift(4).map(_.toInt).getOrElse(8)
-        recall(s"lsh(p=$nPlanes,t=$nTables)", Similarity.lshTopK(queries,
-          corpus, k, dim = 64, nPlanes = nPlanes, nTables = nTables))
-        recall(s"ivf(probe=$nProbe)", Similarity.ivfTopK(queries, corpus, k,
-          nCells = 16, nProbe = nProbe, lloydIters = 3))
-        recall(s"rp(of=$overfetch)", Similarity.rpTopK(queries, corpus, k,
-          dim = 64, overfetch = overfetch))
-        truth.unpersist(); corpus.unpersist()
-      }
-    } else if (args.headOption.contains("--fuzzy-scale")) {
-      // growth curve for PassJoin fuzzy decontamination: the benchmark
-      // set stays FIXED (eval suites don't grow with the corpus) while
-      // the corpus scales ×m; copies >0 pass through a copy-specific
-      // alphabet permutation so only copy-0 docs can match — candidate
-      // volume stays benchmark-linked while the scanned/segmented corpus
-      // grows honestly m×. Expected: linear in m (the segment projection
-      // + equi-join probe), with the verify kernel flat.
-      import graft.ops.Decontaminate
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val alphabet = ('a' to 'z').mkString
-      val coprimes = Seq(1, 3, 5, 7, 9, 11, 15, 17, 19, 21, 23, 25)
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 2, 5, 10)
-      val bench = base.filter(pmod(col("doc_id"), lit(8)) === 0)
-        .select(col("doc_id").as("benchmark_id"),
-          concat(substring(col("text"), 1, 10),
-            substring(col("text"), 14, 35)).as("text"))
-      mults.foreach { m =>
-        val corpus = (0 until m).map { k =>
-          val mult = coprimes(k % coprimes.length)
-          val perm = (0 until 26).map(i =>
-            ('a' + (i * mult + k) % 26).toChar).mkString
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            (if (k == 0) col("text")
-             else translate(col("text"), alphabet, perm)).as("text"))
-        }.reduce(_ unionByName _)
+    spark.sparkContext.setLogLevel("ERROR")
+    queries.foreach { q =>
+      for (pass <- Seq("cold", "warm")) {
         val t0 = System.nanoTime()
-        val n = Decontaminate.fuzzyPairs(corpus, bench,
-          prefixLen = 48, maxDist = 5).count()
-        println(f"FUZZY-SCALE x$m pairs=$n " +
-          f"time=${(System.nanoTime() - t0) / 1e9}%.2f")
+        graft.queries.Registry.all(q).build(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        println(f"TIME $q $pass ${(System.nanoTime() - t0) / 1e9}%.3f")
       }
-    } else if (args.headOption.contains("--screen-scale")) {
-      // Bloom-screen growth curve: history AND fresh shard both scale ×m
-      // (disjoint token suffixes per copy keep content hashes distinct,
-      // so the filter load factor kN/m grows honestly). Expected: build
-      // linear in m but output bounded by mBits; probe linear in m with
-      // the bits join staying broadcast; false-positive count rising
-      // with load exactly as (1-e^(-kN/m))^k predicts — the curve shows
-      // WHEN a fixed-m filter saturates and the word-packed variant (or
-      // a bigger m) takes over.
-      import graft.ops.Sketches
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 2, 5, 10)
-      val mBits = 65536
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1~c$k").as("text"))
-        }.reduce(_ unionByName _)
-        val hist = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-          .select(md5(col("text")).as("h"))
-        val fresh = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-          .select(col("doc_id"), md5(col("text")).as("h"))
-        val t0 = System.nanoTime()
-        val bits = Sketches.bloomBits(hist, col("h"), mBits = mBits)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nBits = bits.count()
-        val t1 = System.nanoTime()
-        val flaggedDf = Sketches.bloomScreen(fresh, "doc_id", col("h"), bits,
-            mBits = mBits)
-          .filter(col("might_contain"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val flagged = flaggedDf.count()
-        val probeT = (System.nanoTime() - t1) / 1e9
-        // true dups exist (the fixture has exact-duplicate texts within a
-        // copy); fp = flagged minus exact-membership hits
-        val trueDups = flaggedDf
-          .join(hist.distinct(), Seq("h"), "left_semi").count()
-        flaggedDf.unpersist()
-        println(f"SCREEN-SCALE x$m set_bits=$nBits/$mBits " +
-          f"flagged=$flagged fp=${flagged - trueDups} " +
-          f"build=${(t1 - t0) / 1e9}%.2f probe=$probeT%.2f")
-        bits.unpersist()
-      }
-    } else if (args.headOption.contains("--audio-scale")) {
-      // growth curve for constellation audio matching: m corpus copies,
-      // each passed through a copy-specific alphabet permutation
-      // (multiplicative+additive over a–z via translate) so the sample
-      // streams are content-DECORRELATED — a mere per-token suffix is
-      // not enough, because the fingerprint is designed to be robust to
-      // small perturbations and offsets, and near-identical copies
-      // legitimately cross-match (measured: origin_top = 1/m exactly,
-      // min-id winning every tie). The curve's real subject is the
-      // TOKEN DOMAIN: with b bands the token space is b²·3 values, and
-      // the match join's collision volume grows as (probes·index)/domain
-      // — quadratic in m at fixed domain. Usage: --audio-scale [bands
-      // [mult ...]] — run bands=8 (the oracle fixture's frontend) at
-      // small m and bands=32 (a 16× richer domain, standing in for a
-      // real FFT's 2²⁰) at large m to see the documented mitigation
-      // carry the growth.
-      import graft.ops.Multimodal
-      val bands = args.lift(1).map(_.toInt).getOrElse(8)
-      val mults =
-        if (args.length > 2) args.drop(2).map(_.toInt).toSeq else Seq(1, 2, 5)
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("doc_id") % 3 === 1)
-      val alphabet = ('a' to 'z').mkString
-      val coprimes = Seq(1, 3, 5, 7, 9, 11, 15, 17, 19, 21, 23, 25)
-      mults.foreach { m =>
-        val sam = (0 until m).map { k =>
-          val mult = coprimes(k % coprimes.length)
-          val perm = (0 until 26).map(i =>
-            ('a' + (i * mult + k) % 26).toChar).mkString
-          base.select((col("doc_id") + lit(k * 10000000L)).as("media_id"),
-            translate(col("text"), alphabet, perm).as("s"))
-        }.reduce(_ unionByName _)
-        val probes = sam
-          .filter(col("media_id") % 5 === 0 && length(col("s")) >= 192)
-          .select(col("media_id"), expr("substring(s, 65)").as("s"))
-        // the comb must tile the frame (window % bands == 0): richer
-        // domains widen the frame with reps fixed at 2
-        val win = math.max(16, bands * 2)
-        val idx = Multimodal.audioFingerprints(sam, window = win, bands = bands)
-        val pfp = Multimodal.audioFingerprints(probes, window = win, bands = bands)
-        val t0 = System.nanoTime()
-        val hits = Multimodal.audioMatch(idx, pfp)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nHits = hits.count()
-        val top = hits.withColumn("rk",
-            org.apache.spark.sql.functions.row_number().over(
-              org.apache.spark.sql.expressions.Window.partitionBy("probe_id")
-                .orderBy(col("votes").desc, col("media_id").asc,
-                  col("delta_w").asc)))
-          .filter(col("rk") === 1)
-        // the probe drops 64 samples = 64/win frames — the true offset
-        val originTop = top.filter(col("probe_id") === col("media_id") &&
-          col("delta_w") === (64 / win)).count()
-        val nProbes = top.count()
-        println(f"AUDIO-SCALE x$m bands=$bands probes=$nProbes " +
-          f"hits=$nHits origin_top=${originTop.toDouble / nProbes}%.3f " +
-          f"time=${(System.nanoTime() - t0) / 1e9}%.2f")
-        hits.unpersist()
-      }
-    } else if (args.headOption.contains("--graph-scale")) {
-      // TextRank growth curve: m corpus copies SHARING one vocabulary
-      // (same tokens, same graph) — the claim under test is that the
-      // iteration cost is vocabulary-bound: corpus m× bigger means the
-      // one-shot bigram aggregation grows, the 4 power iterations don't.
-      import graft.ops.Graph
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 2, 5, 10)
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            col("text"))
-        }.reduce(_ unionByName _)
-        time(s"graph-scale-x$m")(noop(Graph.textRank(docs, iters = 4)))
-      }
-    } else if (args.headOption.contains("--events-scale")) {
-      // growth curve for the event-analytics family: m copies of the
-      // events table with disjoint user populations (user_id offset) —
-      // honestly m× the users AND m× the rows, the shape a growing
-      // product emits. Probes the two classic scale risks: the as-of
-      // join (per-user sort + last-observation carry) and windowed
-      // sessionization (per-user event-time sort).
-      import org.apache.spark.sql.expressions.Window
-      val base = graft.util.Tables.events(spark, sfDir)
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 5, 10)
-      mults.foreach { m =>
-        val ev = (0 until m).map { k =>
-          base.select((col("user_id") + lit(k * 10000000L)).as("user_id"),
-            (col("event_id") + lit(k * 1000000000L)).as("event_id"),
-            col("event_type"), col("ts_ns"))
-        }.reduce(_ unionByName _)
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("ts_ns"))
-        val clicks = ev.filter(col("event_type") === "click")
-          .groupBy("user_id", "ts_ns")
-          .agg(max("event_id").as("click_event"))
-          .withColumn("click_ts_ns", col("ts_ns"))
-        time(s"events-asof-x$m")(
-          noop(graft.ops.AsOf.join(purchases, clicks, "user_id", "ts_ns")))
-        val byUser = Window.partitionBy("user_id").orderBy("ts_ns", "event_id")
-        time(s"events-sessions-x$m")(noop(
-          ev.withColumn("prev_ns", lag(col("ts_ns"), 1).over(byUser))
-            .withColumn("new_session",
-              when(col("prev_ns").isNull ||
-                col("ts_ns") - col("prev_ns") > 1800L * 1000000000L, 1)
-                .otherwise(0))
-            .groupBy("user_id")
-            .agg(sum("new_session").as("n_sessions"),
-              count(lit(1)).as("n_events"))))
-      }
-    } else if (args.headOption.contains("--text-scale")) {
-      // growth curve for the aggregation-shaped text ops: tf-idf (corpus
-      // joins on the term key), n-gram LM coverage (model table is
-      // vocabulary-sized), and BPE training (an 8-round aggregation
-      // loop whose per-round work is pair-vocabulary-sized). Disjoint
-      // token suffixes per copy = honestly m× corpus AND m× vocabulary.
-      import graft.ops.TextAnalysis
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 5, 10)
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            col("source"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1~c$k").as("text"))
-        }.reduce(_ unionByName _)
-        time(s"text-tfidf-x$m")(noop(TextAnalysis.tfidf(docs)))
-        time(s"text-lmcov-x$m")(noop(TextAnalysis.lmCoverage(docs)))
-        time(s"text-bpetrain-x$m")(noop(TextAnalysis.bpeTrain(docs, 8)))
-        // C4 line dedup: per-source boilerplate head/tail + 10-token body
-        // lines (the q_text_line_dedup shape). Copies keep the SAME
-        // boilerplate (df grows ×m — the realistic mode) while body
-        // lines stay distinct (suffixed tokens).
-        val lined = docs
-          .withColumn("_t", TextAnalysis.tokens(col("text")))
-          .withColumn("lines", concat(
-            array(concat(lit("subscribe to "), col("source"),
-              lit(" newsletter"))),
-            transform(
-              sequence(lit(0), floor((size(col("_t")) - 1) / 10).cast("int")),
-              i => array_join(slice(col("_t"), i * 10 + 1, lit(10)), " ")),
-            array(concat(lit("copyright "), col("source"),
-              lit(" all rights reserved")))))
-          .select(col("doc_id"), col("lines"))
-        time(s"text-linededup-x$m")(noop(graft.ops.TextClean.lineDedup(lined)))
-      }
-    } else if (args.headOption.contains("--admit-scale")) {
-      // streaming-admission growth curve: ONE fixed 500-doc batch (250
-      // exact-text near-dups of stored docs + 250 novel) admitted against
-      // a stored corpus+index at m× the sf corpus. The incremental
-      // contract says per-batch cost grows only with the banding join
-      // against the index, never with history×history — this measures it.
-      import graft.ops.Dedup
-      import graft.streaming.StreamingDedup
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 5, 10)
-      mults.foreach { m =>
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"graft-admit-x$m").toString
-        val hist = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1~c$k").as("text"))
-        }.reduce(_ unionByName _)
-        hist.write.parquet(s"$dir/corpus")
-        Dedup.minhashSignatures(Dedup.shingles(hist), 8)
-          .write.parquet(s"$dir/index")
-        val nearDups = base.orderBy("doc_id").limit(250)
-          .select((col("doc_id") + lit(900000000L)).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", "$1~c0").as("text"))
-        val novel = base.orderBy("doc_id").limit(250)
-          .select((col("doc_id") + lit(910000000L)).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", "$1~nv").as("text"))
-        val batch = nearDups.unionByName(novel).localCheckpoint(true)
-        val t0 = System.nanoTime()
-        val r = StreamingDedup.admitBatch(batch, s"$dir/corpus", s"$dir/index")
-        println(f"TIME admit-x$m ${(System.nanoTime() - t0) / 1e9}%.3f " +
-          s"admitted=${r.admitted} rejected=${r.rejected}")
-      }
-    } else if (args.headOption.contains("--minhash-fast")) {
-      // portable (md5 string family, what the DuckDB oracle replays) vs
-      // production (xxhash64 codegen family) — the documented trade,
-      // measured at 1x and 10x corpus
-      import graft.ops.Dedup
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      // untimed warm-up: codegen + JIT + page cache, so family timings
-      // compare plans rather than session startup
-      noop(Dedup.minhashLsh(base, portable = true))
-      noop(Dedup.minhashLsh(base, portable = false))
-      Seq(1, 10).foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1~c$k").as("text"))
-        }.reduce(_ unionByName _)
-        time(s"minhash-portable-x$m")(noop(Dedup.minhashLsh(docs, portable = true)))
-        time(s"minhash-xxhash64-x$m")(noop(Dedup.minhashLsh(docs, portable = false)))
-      }
-    } else if (args.headOption.contains("--minhash-profile")) {
-      import graft.ops.Dedup
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val sh = Dedup.shingles(docs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      time("1-shingles-materialize")(sh.count(): Unit)
-      val sigs = Dedup.minhashSignatures(sh, 8)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      time("2-signatures")(sigs.count(): Unit)
-      val cands = Dedup.lshCandidates(sigs, 8, 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      time("3-candidates")(cands.count(): Unit)
-      time("4-verify")(noop(Dedup.verifyJaccard(cands, sh)))
-    } else if (args.headOption.contains("--ds-scale")) {
-      // Dawid-Skene growth: m disjoint copies of the 5-rater fixture
-      // (doc_id offsets; same rater pool — confusion state stays
-      // raters×K², corpus-independent). Claim under test: per-EM-round
-      // cost is corpus-linear, model state bounded.
-      import graft.ops.ChatData
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), expr("pmod(n_chars div 50, 4)").as("_true"))
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 4, 16)
-      mults.foreach { m =>
-        val items = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            col("_true"))
-        }.reduce(_ unionByName _)
-        val ratings = items
-          .withColumn("rater", explode(sequence(lit(0), lit(4))))
-          .withColumn("_v",
-            conv(substring(md5(concat(col("doc_id").cast("string"),
-              lit(":"), col("rater").cast("string"))), 1, 1), 16, 10)
-              .cast("long"))
-          .withColumn("label",
-            when(col("_v") < col("rater") + 2,
-              pmod(col("_true") + 1 + pmod(col("_v"), lit(3)), lit(4)))
-              .otherwise(col("_true")))
-          .localCheckpoint(true)
-        time(s"dawid-skene-x$m")(noop(ChatData.dawidSkene(ratings,
-          "doc_id", "rater", "label", nClasses = 4, rounds = 2)))
-      }
-    } else if (args.headOption.contains("--ppr-scale")) {
-      // personalized-PageRank growth (the q_text_topic_expand shape): m
-      // disjoint copies with per-copy token suffixes — vocabulary AND
-      // edge table grow m×, seeds seeded per copy so probability mass is
-      // everywhere. Claim under test: each PPR round is ONE edge-table
-      // join — corpus-linear per round, rounds fixed.
-      import graft.ops.Graph
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 4, 16)
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1~c$k").as("text"))
-        }.reduce(_ unionByName _)
-        val pairs = graft.ops.TextAnalysis.ngramCounts(docs, 2)
-          .groupBy("gram").agg(sum(col("c")).as("w"))
-          .select(split(col("gram"), " ").as("uv"), col("w"))
-          .select(element_at(col("uv"), 1).as("a"),
-            element_at(col("uv"), 2).as("b"), col("w"))
-          .filter(col("a") =!= col("b"))
-        val edges = pairs
-          .select(col("a").as("u"), col("b").as("v"), col("w"))
-          .unionByName(
-            pairs.select(col("b").as("u"), col("a").as("v"), col("w")))
-          .groupBy("u", "v").agg(sum(col("w")).as("w"))
-        import spark.implicits._
-        val seeds = (0 until m)
-          .flatMap(k => Seq(s"join~c$k", s"hash~c$k")).toDF("tok")
-        time(s"ppr-x$m")(noop(
-          Graph.personalizedPageRank(edges, seeds, iters = 4)))
-      }
-    } else if (args.headOption.contains("--frames-scale")) {
-      // shot/keyframe growth: m copies of the synthesized-media fixture,
-      // per-copy alphabet permutation so frame signatures decorrelate.
-      // Claims under test: shotBoundaries is one lag window + groupBy
-      // per media (linear); keyframes adds the within-shot pair join —
-      // bounded by shot² per media, still corpus-linear across media.
-      import graft.ops.Multimodal
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("doc_id") % 3 === 2)
-      val alphabet = ('a' to 'z').mkString
-      val coprimes = Seq(1, 3, 5, 7, 9, 11, 15, 17, 19, 21, 23, 25)
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 4, 16)
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          val mult = coprimes(k % coprimes.length)
-          val perm = (0 until 26).map(i =>
-            ('a' + (i * mult + k) % 26).toChar).mkString
-          base.select((col("doc_id") + lit(k * 10000002L)).as("doc_id"),
-            translate(col("text"), alphabet, perm).as("text"))
-        }.reduce(_ unionByName _).localCheckpoint(true)
-        val media = Multimodal.synthesize(docs)
-        time(s"shots-x$m")(noop(
-          Multimodal.shotBoundaries(media, everyNth = 1,
-            thresholdBits = 16)))
-        time(s"keyframes-x$m")(noop(
-          Multimodal.keyframes(media, everyNth = 1, thresholdBits = 16)))
-      }
-    } else if (args.headOption.contains("--curation-scale")) {
-      // END-TO-END curation throughput headline: normalize → quality/
-      // lang gates → exact dedup → near-dedup (MinHash LSH) → pack
-      // (epoch-shuffle shard assignment), chained over m disjoint corpus
-      // copies, with a per-stage wall split (each stage materialized via
-      // localCheckpoint so its timing is its own, not its lineage's).
-      // The pipeline-level companion to --mask-build: docs/s for the
-      // whole curation chain. Usage: --curation-scale [mults...]
-      import graft.ops.{Dedup, DataSelect, TextAnalysis, TextClean}
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val mults =
-        if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(20)
-      mults.foreach { m =>
-        val docs = (0 until m).map { k =>
-          base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-            col("lang"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1~c$k").as("text"))
-        }.reduce(_ unionByName _).localCheckpoint(true)
-        val nIn = docs.count()
-        def stage(tag: String)(df: org.apache.spark.sql.DataFrame)
-            : (org.apache.spark.sql.DataFrame, Double) = {
-          val t0 = System.nanoTime()
-          val out = df.localCheckpoint(true)
-          val secs = (System.nanoTime() - t0) / 1e9
-          println(f"TIME curation-x$m/$tag $secs%.3f rows=${out.count()}")
-          (out, secs)
-        }
-        val tAll = System.nanoTime()
-        val (normed, s1) = stage("1-normalize")(docs
-          .withColumn("text", TextClean.normalize(col("text"))))
-        val (gated, s2) = stage("2-gates")(normed
-          .withColumn("quality_bp",
-            floor(TextAnalysis.qualityScore(col("text")) * 10000)
-              .cast("long"))
-          .filter(col("quality_bp") >= 4000 && col("lang") === "en"))
-        val toks = split(col("text"), " ")
-        val keyed = gated.withColumn("content_key",
-          md5(concat_ws(" ", (1 to 5).map(i => element_at(toks, i)): _*)))
-        val (exact, s3) = stage("3-exact-dedup")(keyed
-          .groupBy("content_key").agg(min("doc_id").as("doc_id"))
-          .join(keyed, Seq("content_key", "doc_id")))
-        val (near, s4) = stage("4-near-dedup")(exact.join(
-          Dedup.minhashLsh(exact.select("doc_id", "text"))
-            .select(col("j").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti"))
-        val (packed, s5) = stage("5-pack")(
-          DataSelect.epochShuffle(near, epoch = 1, nShards = 32))
-        val total = (System.nanoTime() - tAll) / 1e9
-        println(f"CURATION-SCALE x$m docs_in=$nIn " +
-          f"docs_out=${packed.count()} total=$total%.1f " +
-          f"docs_per_s=${nIn / total}%.0f stages=[$s1%.1f,$s2%.1f," +
-          f"$s3%.1f,$s4%.1f,$s5%.1f]")
-        Seq(normed, gated, exact, near, packed)
-          .foreach(_.unpersist())
-      }
-    } else if (args.headOption.contains("--mask-build")) {
-      // flagship at-scale headline: a 10⁸-candidate mask (?d×8 = exactly
-      // 1e8) × 2 algos end-to-end through the standard build path —
-      // codegen expansion → distinct → hash expansion → range sort →
-      // zstd + native bloom + footer stamp. The reference's in-RAM sort
-      // (build.rs:178-208) cannot run this size; this is the number that
-      // answers "how fast does the rebuilt engine do the reference's one
-      // job". Usage: --mask-build [mask [numFiles]]
-      import graft.sources.MaskSource
-      val mask = args.lift(1).getOrElse("?d?d?d?d?d?d?d?d")
-      val nFiles = args.lift(2).map(_.toInt).getOrElse(64)
-      val n = MaskSource.cardinality(mask)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-maskbuild").toString + "/db"
-      // peak-heap sampler (driver+executors share the local[32] JVM, so
-      // this IS the job's peak memory)
-      val mem = java.lang.management.ManagementFactory.getMemoryMXBean
-      val peak = new java.util.concurrent.atomic.AtomicLong(0L)
-      val sampler = new Thread(() => {
-        try while (true) {
-          peak.getAndUpdate(p =>
-            math.max(p, mem.getHeapMemoryUsage.getUsed))
-          Thread.sleep(250)
-        } catch { case _: InterruptedException => }
-      })
-      sampler.setDaemon(true)
-      sampler.start()
-      val words = MaskSource.expand(spark, mask)
-        .as[String](org.apache.spark.sql.Encoders.STRING)
-      val t0 = System.nanoTime()
-      val res = graft.pipeline.BuildJob.run(spark, words, out,
-        graft.pipeline.BuildJob.Config(Seq("md5", "sha256"),
-          sourceName = s"mask:$mask", numFiles = Some(nFiles),
-          bloomNdv = math.min(8000000L, n / nFiles * 2),
-          footerBloom = true))
-      val secs = (System.nanoTime() - t0) / 1e9
-      sampler.interrupt()
-      val parts = new java.io.File(out).listFiles()
-        .filter(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-      println(f"MASK-BUILD mask=$mask candidates=$n " +
-        f"records=${res.records} time=$secs%.1f " +
-        f"words_per_s=${n / secs}%.0f recs_per_s=${res.records / secs}%.0f " +
-        f"files=${parts.length} bytes=${parts.map(_.length()).sum} " +
-        f"peak_heap_mb=${peak.get() / 1048576}")
-      // layout proof: files tile the hash space (range sort held at 1e8)
-      val ranges = spark.read.parquet(out)
-        .select(input_file_name().as("f"), hex(col("hash")).as("h"))
-        .groupBy("f").agg(min("h").as("lo"), max("h").as("hi"))
-        .orderBy("lo").collect().map(r => (r.getString(1), r.getString(2)))
-      val overlaps = ranges.sliding(2).count {
-        case Array((_, hi1), (lo2, _)) => hi1 > lo2
-        case _ => false
-      }
-      println(s"MASK-BUILD layout files=${ranges.length} " +
-        s"range_overlaps=$overlaps (0 = perfect hash tiling)")
-      // and the lookup the layout exists for: warm exact probes
-      val samples = Seq("00012345", "42424242", "99999999")
-        .map(w => graft.core.Hashers.hex(
-          graft.core.Hashers("sha256").hash(w.getBytes("UTF-8"))))
-      samples.foreach { h => // cold pass primes footer blooms
-        graft.pipeline.QueryJob.run(spark, out,
-          graft.pipeline.QueryJob.Params(h)).count()
-      }
-      val tq = System.nanoTime()
-      val found = samples.map { h =>
-        graft.pipeline.QueryJob.run(spark, out,
-          graft.pipeline.QueryJob.Params(h)).count()
-      }.sum
-      println(f"MASK-BUILD exact-lookup warm avg " +
-        f"${(System.nanoTime() - tq) / 1e9 / samples.size * 1000}%.0f ms " +
-        f"(found=$found/${samples.size})")
-    } else if (args.headOption.contains("--build-bench-large")) {
-      // synthetic N-word build: exercises distinct + expansion + range sort
-      // + write well past the corpus sizes in testdata (spill-safety check)
-      val n = args.lift(1).map(_.toLong).getOrElse(5000000L)
-      val words = spark.range(n)
-        .select(concat(lit("synthetic-word-"), col("id")).as("w"))
-        .as(org.apache.spark.sql.Encoders.STRING)
-      val out = java.nio.file.Files.createTempDirectory("graft-bbl").toString + "/db"
-      val t0 = System.nanoTime()
-      val res = graft.pipeline.BuildJob.run(spark, words, out,
-        graft.pipeline.BuildJob.Config(Seq("md5", "sha256"), numFiles = Some(32)))
-      val secs = (System.nanoTime() - t0) / 1e9
-      val stats = graft.pipeline.InfoJob.run(spark, out)
-      println(f"TIME build-bench-large $secs%.3f records=${res.records} " +
-        f"recs_per_s=${res.records / secs}%.0f bytes=${stats.sizeBytes}")
-      // and an exact-lookup latency sample against the big db
-      val sample = spark.read.parquet(out).select(col("hash")).limit(20)
-        .collect().map(_.getAs[Array[Byte]](0))
-      val t1 = System.nanoTime()
-      sample.foreach { h =>
-        graft.pipeline.QueryJob.run(spark, out,
-          graft.pipeline.QueryJob.Params(graft.core.Hashers.hex(h))).count()
-      }
-      val qSecs = (System.nanoTime() - t1) / 1e9
-      println(f"TIME exact-lookup avg ${qSecs / sample.length * 1000}%.1f ms over ${sample.length} lookups")
-      // footer-bloom value at scale: negative exact lookups before the
-      // bloom stamp (scan path: native blooms + range pruning) vs after
-      // (footer fast-reject: no scan planned at all), plus the one-off
-      // stamp cost itself. sha256-length probes: the db's longest digest,
-      // so the fast path's no-longer-digest soundness gate passes
-      val absent = (0 until 20).map(i => graft.core.Hashers.hex(
-        graft.core.Hashers("sha256").hash(s"graft-absent-$i".getBytes("UTF-8"))))
-      def negLookups(): Double = {
-        val t = System.nanoTime()
-        absent.foreach { h =>
-          graft.pipeline.QueryJob.run(spark, out,
-            graft.pipeline.QueryJob.Params(h)).count()
-        }
-        (System.nanoTime() - t) / 1e9
-      }
-      val negScan = negLookups()
-      println(f"TIME neg-lookup-noBloom avg ${negScan / absent.length * 1000}%.1f ms")
-      val t2 = System.nanoTime()
-      val stamped = graft.pipeline.FooterMeta.writeBlooms(spark, out)
-      println(f"TIME bloom-stamp ${(System.nanoTime() - t2) / 1e9}%.3f files=$stamped")
-      // first bloom lookup pays the one-off footer read (bitmaps cached
-      // after, signature-validated); warm lookups are in-memory probes
-      val tFirst = System.nanoTime()
-      graft.pipeline.QueryJob.run(spark, out,
-        graft.pipeline.QueryJob.Params(absent.head)).count()
-      println(f"TIME neg-lookup-bloom-first ${(System.nanoTime() - tFirst) / 1e9 * 1000}%.1f ms")
-      val negBloom = negLookups()
-      println(f"TIME neg-lookup-bloom-warm avg ${negBloom / absent.length * 1000}%.1f ms")
-      // the warm average mixes pure rejects with ~1%-fp single-file scans;
-      // isolate the pure all-files-reject cost (the metadata-only answer)
-      val blooms = graft.pipeline.FooterMeta.readBlooms(spark, out)
-      val pureReject = absent.filter { h =>
-        val bytes = h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
-        blooms.forall(_._2.exists(!_.mightContain(bytes)))
-      }
-      if (pureReject.nonEmpty) {
-        val t3 = System.nanoTime()
-        pureReject.foreach { h =>
-          graft.pipeline.QueryJob.run(spark, out,
-            graft.pipeline.QueryJob.Params(h)).count()
-        }
-        println(f"TIME neg-lookup-bloom-pure avg ${(System.nanoTime() - t3) / 1e9 / pureReject.length * 1000}%.1f ms over ${pureReject.length} all-reject lookups")
-      }
-    } else if (args.headOption.contains("--build-bench")) {
-      // full BuildJob throughput: shingle corpus → 9-algo db on disk
-      // (zstd + bloom + range sort), the reference's `shaha build` analog
-      import spark.implicits._
-      val words = graft.queries.DedupShared
-        .shingles(spark.read.parquet(s"$sfDir/documents.parquet"))
-        .select("w").as[String]
-      val out = java.nio.file.Files.createTempDirectory("graft-bb").toString + "/db"
-      val t0 = System.nanoTime()
-      val res = graft.pipeline.BuildJob.run(spark, words, out,
-        graft.pipeline.BuildJob.Config(graft.core.Hashers.names, numFiles = Some(8)))
-      val secs = (System.nanoTime() - t0) / 1e9
-      val stats = graft.pipeline.InfoJob.run(spark, out)
-      println(f"TIME build-bench $secs%.3f records=${res.records} " +
-        f"recs_per_s=${res.records / secs}%.0f bytes=${stats.sizeBytes}")
-    } else if (args.headOption.contains("--explain")) {
-      args.drop(1).foreach { q =>
-        println(s"==== $q ====")
-        graft.queries.Registry.all(q).build(spark, sfDir).explain("formatted")
-      }
-    } else if (args.nonEmpty) {
-      args.foreach { q =>
-        time(s"$q cold")(noop(graft.queries.Registry.all(q).build(spark, sfDir)))
-        time(s"$q warm")(noop(graft.queries.Registry.all(q).build(spark, sfDir)))
-      }
-    } else {
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      time("scan cold")(noop(base))
-      time("scan warm")(noop(base))
-      val toks = split(col("text"), " ")
-      val hof = base.filter(size(toks) >= 3)
-        .select(explode(transform(sequence(lit(0), size(toks) - 3), i =>
-          concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2),
-            element_at(toks, i + 3)))).as("w"))
-      time("shingle-HOF cold")(noop(hof))
-      time("shingle-HOF warm")(noop(hof))
-      val rep = base.repartition()
-      val hofRep = rep.filter(size(toks) >= 3)
-        .select(explode(transform(sequence(lit(0), size(toks) - 3), i =>
-          concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2),
-            element_at(toks, i + 3)))).as("w"))
-      time("shingle-HOF-repart cold")(noop(hofRep))
-      time("shingle-HOF-repart warm")(noop(hofRep))
-      val dw = hofRep.select("w").distinct()
-      time("distinct warm")(noop(dw))
-      time("md5x2 warm")(noop(dw.select(explode(array(md5(col("w")),
-        sha2(col("w"), 256))).as("h"))))
-      // tokens materialized once as a column — the lambda then references a
-      // bound attribute instead of re-evaluating split() per element
-      val mat = rep.select(col("doc_id"), split(col("text"), " ").as("t"))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"),
-          explode(transform(sequence(lit(0), size(col("t")) - 3), i =>
-            concat_ws(" ", element_at(col("t"), i + 1),
-              element_at(col("t"), i + 2), element_at(col("t"), i + 3)))).as("w"))
-      time("shingle-materialized cold")(noop(mat))
-      time("shingle-materialized warm")(noop(mat))
-      val dwm = mat.select("w").distinct()
-      time("distinct-mat warm")(noop(dwm))
     }
     spark.stop()
   }

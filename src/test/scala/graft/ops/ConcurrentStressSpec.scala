@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicBoolean
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 
-/** Stress repro for the cross-suite flake: the portable minhash pipeline
+/** Stress repro for the cross-suite flake: the md5 minhash pipeline
   * intermittently returned ZERO rows when an identical pipeline ran
   * concurrently on the shared session (full-suite runs only). Two
   * threads composing the same op + cache churn should reproduce it

@@ -18,9 +18,8 @@ import graft.SparkTestBase
   *  - [[Dedup.prefixFilterJaccard]] advertises COMPLETE recall at the
   *    threshold (the pigeonhole prefix bound) — checked against
   *    all-pairs exact Jaccard, bit-for-bit on the integer basis points.
-  *  - [[Dedup.minhashLsh]]'s two hash families (portable md5 vs
-  *    production xxhash64) must both pair every EXACT duplicate:
-  *    identical shingle sets collide in every band in any family, so a
+  *  - [[Dedup.minhashLsh]]'s md5 hash family must pair every EXACT
+  *    duplicate: identical shingle sets collide in every band, so a
   *    missed exact pair can only be a banding-plumbing bug.
   */
 class DedupPropertySpec extends AnyFunSuite with SparkTestBase {
@@ -136,12 +135,12 @@ class DedupPropertySpec extends AnyFunSuite with SparkTestBase {
     val corpus = (base ++ base.map { case (id, s) => (id + 5000L, s) })
       .toDF("doc_id", "text")
     val wantPairs = base.map { case (id, _) => (id, id + 5000L) }.toSet
-    Seq(true, false).foreach { fam =>
-      val got = Dedup.minhashLsh(corpus, portable = fam)
-        .filter(col("jaccard") >= 1.0)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(wantPairs.subsetOf(got),
-        s"portable=$fam missed exact pairs ${wantPairs.diff(got).take(5)}")
-    }
+    // the test name predates the xxhash64 family's removal; the md5
+    // family is now the only one
+    val got = Dedup.minhashLsh(corpus)
+      .filter(col("jaccard") >= 1.0)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(wantPairs.subsetOf(got),
+      s"missed exact pairs ${wantPairs.diff(got).take(5)}")
   }
 }

@@ -26,16 +26,6 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
       s"LSH missed ${truth -- found} / false ${found -- truth}")
   }
 
-  test("fast (xxhash64) minhash family finds the same verified pairs as portable md5") {
-    val portable = Dedup.minhashLsh(docs).select("i", "j")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fast = Dedup.minhashLsh(docs, portable = false).select("i", "j")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // signatures differ but exact-Jaccard verification makes the final
-    // pair sets agree (LSH candidate recall is high for >=0.8 pairs)
-    assert(fast == portable, s"fast-only ${fast -- portable} / md5-only ${portable -- fast}")
-  }
-
   test("GENERATIVE: each minhash family verifies a sound subset of truth; " +
       "exact duplicates are always recalled (random corpora)") {
     // HISTORY (r10): this test originally asserted the md5 and xxhash64
@@ -45,14 +35,14 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
     // twin, j ≈ 0.93, recalled by md5 banding and missed by xxhash64 —
     // banding recall IS family-dependent, exactly the r9 verdict's
     // caveat). The resolution was to ELIMINATE the coupling: every
-    // oracle-declared query now computes the portable md5 family
-    // directly (cheap since the graft_word_minhash kernel), so no
-    // declared result depends on cross-family agreement. What remains
-    // here are the two properties that are THEOREMS, pinned per family:
+    // oracle-declared query computes the md5 family directly (cheap
+    // since the graft_word_minhash kernel), and the xxhash64 family
+    // was later deleted outright. What remains here are the two
+    // properties that are THEOREMS, pinned for the md5 family:
     //  - soundness: every verified pair has exact Jaccard ≥ threshold
-    //    (so ⊆ the brute-force truth set), any family;
+    //    (so ⊆ the brute-force truth set);
     //  - exact-duplicate recall: j = 1 ⇒ identical signatures ⇒ every
-    //    band collides ⇒ the pair is always a candidate, any family.
+    //    band collides ⇒ the pair is always a candidate.
     import spark.implicits._
     val vocab = Vector("data", "model", "train", "loss", "rate", "token",
       "corpus", "dedup", "spark", "scale", "batch", "node", "graph",
@@ -83,16 +73,13 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
       val exactDups = twins.collect {
         case (id, t) if id >= 100000L && id < 200000L => (id - 100000L, id)
       }.toSet
-      for (portable <- Seq(true, false)) {
-        val found = Dedup.minhashLsh(d, portable = portable)
-          .select("i", "j")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        assert(found.subsetOf(truth),
-          s"seed=$seed portable=$portable unsound pairs ${found -- truth}")
-        assert(exactDups.subsetOf(found),
-          s"seed=$seed portable=$portable missed exact dups " +
-            s"${exactDups -- found}")
-      }
+      val found = Dedup.minhashLsh(d)
+        .select("i", "j")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(found.subsetOf(truth),
+        s"seed=$seed unsound pairs ${found -- truth}")
+      assert(exactDups.subsetOf(found),
+        s"seed=$seed missed exact dups ${exactDups -- found}")
     }
   }
 
@@ -159,7 +146,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
   test("incremental minhash: new shard vs stored index equals the full run restricted") {
     val hist = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
     val fresh = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-    val histSigs = Dedup.minhashSignatures(Dedup.shingles(hist), 8)
+    val histSigs = Dedup.minhashSignaturesKernel(hist, 8)
     val inc = Dedup.incrementalMinhash(fresh, hist, histSigs, threshold = 0.8)
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val fullRestricted = Dedup.minhashLsh(docs, threshold = 0.8)
@@ -178,13 +165,13 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-sigidx").toString
     val hist = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
     val fresh = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-    Dedup.minhashSignatures(Dedup.shingles(hist), 8)
+    Dedup.minhashSignaturesKernel(hist, 8)
       .write.mode("overwrite").parquet(s"$dir/sigs")
     val reloaded = spark.read.parquet(s"$dir/sigs")
     val viaStore = Dedup.incrementalMinhash(fresh, hist, reloaded, threshold = 0.8)
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val inline = Dedup.incrementalMinhash(fresh, hist,
-        Dedup.minhashSignatures(Dedup.shingles(hist), 8), threshold = 0.8)
+        Dedup.minhashSignaturesKernel(hist, 8), threshold = 0.8)
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaStore == inline && viaStore.nonEmpty)
   }
@@ -204,7 +191,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
     var histSigs: Option[org.apache.spark.sql.DataFrame] = None
     val got = scala.collection.mutable.Set[(Long, Long)]()
     batches.foreach { b =>
-      val bSigs = Dedup.minhashSignatures(Dedup.shingles(b), 8)
+      val bSigs = Dedup.minhashSignaturesKernel(b, 8)
         .localCheckpoint(true)
       histSigs match {
         case None => // first batch: only within-batch pairs exist

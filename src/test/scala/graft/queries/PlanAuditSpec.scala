@@ -131,11 +131,9 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       .select(col("id").as("doc_id"))
       .select(col("doc_id"), text.as("text"))
     val ops = Seq(
-      "minhashLsh" -> graft.ops.Dedup.minhashLsh(docs, portable = false),
-      "minhashLsh-portable" -> graft.ops.Dedup.minhashLsh(docs),
+      "minhashLsh" -> graft.ops.Dedup.minhashLsh(docs),
       "minhashLshChars" ->
-        graft.ops.Dedup.minhashLshChars(docs, threshold = 0.8,
-          portable = false),
+        graft.ops.Dedup.minhashLshChars(docs, threshold = 0.8),
       "prefixFilterJaccard" -> graft.ops.Dedup.prefixFilterJaccard(docs),
       "ngramJaccard" -> graft.ops.Dedup.ngramJaccard(docs),
       "containment" -> graft.ops.Dedup.containment(docs),
@@ -248,7 +246,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("kernelized minhash signature paths stay shuffle-free (r10 gate)") {
-    // The r10 minhash kernels turned both portable signature builders
+    // The r10 minhash kernels turned both md5 signature builders
     // into per-row projections. Pin the shape: the signature frame must
     // carry the kernel and no keyed exchange / aggregate / join (the
     // one-file fixture's round-robin fanOut is the only exchange

@@ -9,7 +9,7 @@ import graft.ops.Dedup
 
 /** The native word-MinHash kernel (graft_word_minhash) must emit
   * bit-identical lane minima to the shingle-explode → vocabulary-md5 →
-  * join → groupBy formulation it replaced in Dedup.minhashSignatures —
+  * join → groupBy formulation it replaced (kept below as `original`) —
   * same split-by-single-space tokens (consecutive spaces = EMPTY
   * tokens, Java split limit −1 semantics), same space-joined n-gram
   * spans, same md5(s ‖ "|" ‖ gram) family, same lexicographic
@@ -36,11 +36,27 @@ class WordMinhashSpec extends AnyFunSuite with SparkTestBase {
   /** The pre-r10 formulation, verbatim: shingles → vocabulary-distinct
     * md5 per lane → join back → groupBy(doc_id) k-min.
     */
-  private def original(d: DataFrame): Map[Long, Seq[String]] =
-    Dedup.minhashSignaturesWith(Dedup.shingles(d, n), k, portable = true)
+  private def original(d: DataFrame): Map[Long, Seq[String]] = {
+    val sh = Dedup.shingles(d, n)
+    def family(s: Int) = md5(concat(lit(s.toString), lit("|"), col("w")))
+    // md5 is the expensive part: compute the k digests once per
+    // DISTINCT shingle (vocabulary-sized work) and join back — at a
+    // typical ~50× occurrence/vocabulary ratio the two extra shuffles
+    // cost less than 50× the md5s
+    val vocabHashes = sh.select("w").distinct().select(
+      col("w") +: (0 until k).map(s => family(s).as(s"h$s")): _*)
+    // the vocabulary is corpus-scaled — partitioned join unless the
+    // caller proved the corpus small (see Partitioning.indexSideFor)
+    sh.join(graft.util.Partitioning.indexSide(vocabHashes), "w")
+      .groupBy("doc_id")
+      .agg(
+        min(col("h0")).as("m0"),
+        (1 until k).map(s => min(col(s"h$s")).as(s"m$s")): _*
+      )
       .collect()
       .map(r => r.getLong(0) -> (0 until k).map(i => r.getString(i + 1)))
       .toMap
+  }
 
   test("matches the vocabulary-join formulation on random and edge docs") {
     val rnd = new scala.util.Random(37)
