@@ -53,7 +53,7 @@ object Bench {
   val DefaultSfDir = "/root/testdata/sf0.1"
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // committed per-query quiet baselines (absent file → no baseline
     // retries; dev sf dirs don't match the baseline's sf and skip too;
@@ -63,19 +63,10 @@ object Bench {
     val baselines: Map[String, Double] =
       if (sfDir.stripSuffix("/") == DefaultSfDir &&
           graft.tools.BaselineGen.cpusOf("BASELINE_QUERIES.json")
-            .forall(_.toString == cpus))
+            .forall(_ == cpus))
         graft.tools.BaselineGen.read("BASELINE_QUERIES.json")
       else Map.empty
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "32m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus)
 
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     // process-CPU clock: local[*] runs every task in this JVM, so the

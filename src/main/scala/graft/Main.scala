@@ -36,13 +36,8 @@ object Main {
   }
 
   private def session(quiet: Boolean): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel(if (quiet) "ERROR" else "WARN")
+    val s = GraftSession.build(master = sys.env.get("GRAFT_MASTER"),
+      logLevel = if (quiet) "ERROR" else "WARN")
     GraftConfig.load().applyTo(s)
     s
   }

@@ -1,5 +1,7 @@
 package graft.sql
 
+import scala.reflect.{ClassTag, classTag}
+
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -24,45 +26,41 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[Digest].getName, null, name, usage, "", "", "",
-      "hash_funcs", "4.0.0", "", "built-in")
+  private type Registration =
+    (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private[sql] val functions
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+  /** `name`, taking exactly `arity` arguments, built by `f`; its
+    * `DESCRIBE FUNCTION` class is the class `f` builds.
+    */
+  private def one[E <: Expression: ClassTag](name: String, usage: String,
+      arity: Int = 1)(f: Seq[Expression] => E): Registration =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classTag[E].runtimeClass.getName, null, name, usage,
+        "", "", "", "hash_funcs", "4.0.0", "", "built-in"),
+      (children: Seq[Expression]) => {
+        require(children.length == arity, s"$name takes exactly " +
+          (if (arity == 1) "one argument" else "two arguments"))
+        f(children)
+      })
+
+  private[sql] val functions: Seq[Registration] =
     Hashers.names.map { algo =>
       val name = s"graft_$algo"
-      (FunctionIdentifier(name),
-        info(name, s"$name(expr) - $algo digest of a string/binary column as binary."),
-        (children: Seq[Expression]) => {
-          require(children.length == 1, s"$name takes exactly one argument")
-          Digest(children.head, algo)
-        })
-    } :+ {
-      val name = "graft_vec_dot"
-      (FunctionIdentifier(name),
-        info(name, s"$name(a, b) - double dot product of two numeric arrays."),
-        (children: Seq[Expression]) => {
-          require(children.length == 2, s"$name takes exactly two arguments")
-          FloatVecDot(children.head, children(1))
-        })
-    } :+ {
-      val name = "graft_nfc"
-      (FunctionIdentifier(name),
-        info(name, s"$name(text) - Unicode NFC normalization."),
-        (children: Seq[Expression]) => {
-          require(children.length == 1, s"$name takes exactly one argument")
-          NfcNormalize(children.head)
-        })
-    } :+ {
-      val name = "graft_nfkc"
-      (FunctionIdentifier(name),
-        info(name, s"$name(text) - Unicode NFKC (compatibility) normalization."),
-        (children: Seq[Expression]) => {
-          require(children.length == 1, s"$name takes exactly one argument")
-          NfcNormalize(children.head, nfkc = true)
-        })
-    }
+      one(name, s"$name(expr) - $algo digest of a string/binary column as binary.") {
+        case Seq(e) => Digest(e, algo)
+      }
+    } ++ Seq(
+      one("graft_vec_dot",
+        "graft_vec_dot(a, b) - double dot product of two numeric arrays.", arity = 2) {
+        case Seq(a, b) => FloatVecDot(a, b)
+      },
+      one("graft_nfc", "graft_nfc(text) - Unicode NFC normalization.") {
+        case Seq(e) => NfcNormalize(e)
+      },
+      one("graft_nfkc",
+        "graft_nfkc(text) - Unicode NFKC (compatibility) normalization.") {
+        case Seq(e) => NfcNormalize(e, nfkc = true)
+      })
 
   /** Text-cleaning ops surfaced as SQL functions. Built from raw Catalyst
     * expression classes (Lower/StringTrim/RegExpReplace) because a
@@ -72,30 +70,25 @@ object GraftExtensions {
     * same ones the Column API uses, so both surfaces stay in lockstep
     * (asserted in GraftExtensionsSpec).
     */
-  private[sql] val textFunctions
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
+  private[sql] val textFunctions: Seq[Registration] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, Lower, RegExpReplace, StringTrim}
-    def one(name: String, usage: String)(f: Expression => Expression) =
-      (FunctionIdentifier(name), info(name, usage),
-        (children: Seq[Expression]) => {
-          require(children.length == 1, s"$name takes exactly one argument")
-          f(children.head)
-        })
     Seq(
       one("graft_normalize",
-        "graft_normalize(text) - canonical lowercase/whitespace-collapsed form.") { e =>
-        StringTrim(RegExpReplace(
-          RegExpReplace(Lower(e), Literal("[\\x00-\\x1f\\x7f]"), Literal(" ")),
-          Literal(" {2,}"), Literal(" ")))
+        "graft_normalize(text) - canonical lowercase/whitespace-collapsed form.") {
+        case Seq(e) =>
+          StringTrim(RegExpReplace(
+            RegExpReplace(Lower(e), Literal("[\\x00-\\x1f\\x7f]"), Literal(" ")),
+            Literal(" {2,}"), Literal(" ")))
       },
       one("graft_redact_pii",
-        "graft_redact_pii(text) - emails/IPv4/phones replaced by placeholders.") { e =>
-        import graft.ops.TextClean.{EmailRe, Ipv4Re, PhoneRe}
-        RegExpReplace(
+        "graft_redact_pii(text) - emails/IPv4/phones replaced by placeholders.") {
+        case Seq(e) =>
+          import graft.ops.TextClean.{EmailRe, Ipv4Re, PhoneRe}
           RegExpReplace(
-            RegExpReplace(e, Literal(PhoneRe), Literal("<PHONE>")),
-            Literal(EmailRe), Literal("<EMAIL>")),
-          Literal(Ipv4Re), Literal("<IP>"))
+            RegExpReplace(
+              RegExpReplace(e, Literal(PhoneRe), Literal("<PHONE>")),
+              Literal(EmailRe), Literal("<EMAIL>")),
+            Literal(Ipv4Re), Literal("<IP>"))
       })
   }
 

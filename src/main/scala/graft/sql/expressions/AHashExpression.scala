@@ -1,7 +1,7 @@
 package graft.sql.expressions
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -29,41 +29,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * render with plain shift/mask projections. Null for an empty string
   * (callers filter empties first).
   */
-case class AHash64(child: Expression) extends UnaryExpression {
+case class AHash64(child: Expression) extends UnaryKernel {
 
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  // null also on EMPTY input (not just null input), so nullability
-  // cannot be derived from the child's
-  override def nullable: Boolean = true
   override def prettyName: String = "graft_ahash64"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string input, got $other")
-    }
 
   override protected def nullSafeEval(s: Any): Any =
     AHash64.compute(s.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val h = ctx.freshName("ahash")
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |Object $h = graft.sql.expressions.AHash64.compute($c);
-         |if ($h == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ((Long) $h).longValue();
-         |}
-       """.stripMargin
-    })
-  }
+  // null also on EMPTY input (not just null input)
+  override protected def nullOnEmpty: Boolean = true
+
+  override protected def call(ctx: CodegenContext, s: String): String =
+    s"graft.sql.expressions.AHash64.compute($s)"
 
   override protected def withNewChildInternal(
       newChild: Expression): AHash64 = copy(child = newChild)

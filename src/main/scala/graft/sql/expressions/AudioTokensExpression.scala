@@ -1,8 +1,8 @@
 package graft.sql.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,7 +35,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (w, token) contract).
   */
 case class AudioTokens(child: Expression, window: Int, bands: Int,
-    deltas: Seq[Int]) extends UnaryExpression {
+    deltas: Seq[Int]) extends UnaryKernel {
 
   require(deltas.nonEmpty && deltas.forall(d => d >= 1 && d < 4),
     s"delta codes are packed into 2 bits: $deltas")
@@ -46,28 +46,16 @@ case class AudioTokens(child: Expression, window: Int, bands: Int,
     StructType(Seq(StructField("w", LongType, nullable = false),
       StructField("token", LongType, nullable = false))),
     containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_audio_tokens"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string input, got $other")
-    }
 
   private lazy val deltaArr: Array[Int] = deltas.toArray
 
   override protected def nullSafeEval(s: Any): Any =
     AudioTokens.compute(s.asInstanceOf[UTF8String], window, bands, deltaArr)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  override protected def call(ctx: CodegenContext, s: String): String = {
     val dRef = ctx.addReferenceObj("deltas", deltaArr, "int[]")
-    defineCodeGen(ctx, ev, s =>
-      s"graft.sql.expressions.AudioTokens.compute($s, $window, $bands, $dRef)")
+    s"graft.sql.expressions.AudioTokens.compute($s, $window, $bands, $dRef)"
   }
 
   override protected def withNewChildInternal(

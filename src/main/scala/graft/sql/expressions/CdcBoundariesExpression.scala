@@ -1,7 +1,7 @@
 package graft.sql.expressions
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,30 +27,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * rule and is unchanged.
   */
 case class CdcBoundaries(child: Expression, w: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   require(w >= 4, s"window too small for a stable mask rule: w=$w")
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_cdc_boundaries"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string input, got $other")
-    }
 
   override protected def nullSafeEval(s: Any): Any =
     CdcBoundaries.compute(s.asInstanceOf[UTF8String], w)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      s => s"graft.sql.expressions.CdcBoundaries.compute($s, $w)")
+  override protected def call(ctx: CodegenContext, s: String): String =
+    s"graft.sql.expressions.CdcBoundaries.compute($s, $w)"
 
   override protected def withNewChildInternal(
       newChild: Expression): CdcBoundaries = copy(child = newChild)

@@ -1,7 +1,7 @@
 package graft.sql.expressions
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,28 +24,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * embarrassingly parallel at any corpus size. ZERO shuffle, zero
   * joins — the operator stays a pure per-row projection.
   */
-case class DctHash64(child: Expression) extends UnaryExpression {
+case class DctHash64(child: Expression) extends UnaryKernel {
 
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_dct_hash64"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string input, got $other")
-    }
 
   override protected def nullSafeEval(s: Any): Any =
     DctHash64.compute(s.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      s => s"graft.sql.expressions.DctHash64.compute($s)")
+  // null also on EMPTY input (not just null input)
+  override protected def nullOnEmpty: Boolean = true
+
+  override protected def call(ctx: CodegenContext, s: String): String =
+    s"graft.sql.expressions.DctHash64.compute($s)"
 
   override protected def withNewChildInternal(
       newChild: Expression): DctHash64 = copy(child = newChild)

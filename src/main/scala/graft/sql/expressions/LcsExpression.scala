@@ -1,7 +1,6 @@
 package graft.sql.expressions
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -20,32 +19,19 @@ import org.apache.spark.sql.types._
   * embarrassingly parallel at any corpus size.
   */
 case class LcsLength(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_lcs_length"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(e: Expression) = e.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    if (ok(left) && ok(right))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<string> inputs, " +
-          s"got ${left.dataType} and ${right.dataType}")
-  }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(StringType), ArrayType(StringType))
 
   override protected def nullSafeEval(l: Any, r: Any): Any =
     LcsLength.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.sql.expressions.LcsLength.compute($a, $b)")
+  override protected def call(a: String, b: String): String =
+    s"graft.sql.expressions.LcsLength.compute($a, $b)"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): LcsLength =

@@ -1,7 +1,7 @@
 package graft.sql.expressions
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,38 +20,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * the output cross-engine.
   */
 case class NfcNormalize(child: Expression, nfkc: Boolean = false)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = if (nfkc) "graft_nfkc" else "graft_nfc"
 
-  private def form: java.text.Normalizer.Form =
-    if (nfkc) java.text.Normalizer.Form.NFKC
-    else java.text.Normalizer.Form.NFC
+  override protected def nullSafeEval(s: Any): Any =
+    NfcNormalize.compute(s.asInstanceOf[UTF8String], nfkc)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string input, got $other")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(java.text.Normalizer.normalize(
-      input.asInstanceOf[UTF8String].toString, form))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val f = if (nfkc) "NFKC" else "NFC"
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"java.text.Normalizer.normalize($c.toString(), " +
-        s"java.text.Normalizer.Form.$f))")
-  }
+  override protected def call(ctx: CodegenContext, s: String): String =
+    s"graft.sql.expressions.NfcNormalize.compute($s, $nfkc)"
 
   override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
     copy(child = newChild)
+}
+
+object NfcNormalize {
+  /** NFKC when `nfkc`, else NFC. Called from generated code — keep the
+    * signature stable.
+    */
+  def compute(s: UTF8String, nfkc: Boolean): UTF8String =
+    UTF8String.fromString(java.text.Normalizer.normalize(s.toString,
+      if (nfkc) java.text.Normalizer.Form.NFKC
+      else java.text.Normalizer.Form.NFC))
 }

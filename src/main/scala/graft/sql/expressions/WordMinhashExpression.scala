@@ -1,7 +1,7 @@
 package graft.sql.expressions
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,31 +35,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * flips the trade (measured r10).
   */
 case class WordMinhash(child: Expression, n: Int, k: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   require(n >= 1, s"gram size must be positive: n=$n")
   require(k >= 1 && k <= 64, s"unreasonable lane count: k=$k")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_word_minhash"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string input, got $other")
-    }
 
   override protected def nullSafeEval(s: Any): Any =
     WordMinhash.compute(s.asInstanceOf[UTF8String], n, k)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      s => s"graft.sql.expressions.WordMinhash.compute($s, $n, $k)")
+  override protected def call(ctx: CodegenContext, s: String): String =
+    s"graft.sql.expressions.WordMinhash.compute($s, $n, $k)"
 
   override protected def withNewChildInternal(
       newChild: Expression): WordMinhash = copy(child = newChild)

@@ -105,7 +105,7 @@ object BaselineGen {
     // measurement shape: at a lower driver core count every query
     // legitimately exceeds a 32-core baseline, and mass retries would
     // pollute the scaling run
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftSession.cpus
     val json =
       s"""{
          |  "_meta": {"src": "${srcs.mkString(",")}", "generated": "$date", "sf": "$sf",

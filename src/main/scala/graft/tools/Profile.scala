@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: time registered queries cold, then warm, each forced
   * through the noop sink (`runMain graft.tools.Profile <query ...>`).
   *
@@ -9,8 +7,7 @@ import org.apache.spark.sql.SparkSession
   * [[graft.Bench.DefaultSfDir]]), so a corpus-growth curve is
   * `python3 tools/scale_gen.py <src> <out> <R>` followed by
   * `SPARK_GRAFT_SF_DIR=<out> ... Profile <query ...>`. The session is
-  * `local[SPARK_GRAFT_CPUS]` (default: this machine's processors) with
-  * `graft.Bench`'s confs, so Profile times the plans Bench times.
+  * [[graft.GraftSession]]'s, so Profile times the plans Bench times.
   * Formatted plans: [[PlanDump]]; hash-db build and lookup layers:
   * perfbench's `hashdb_build` / `hashdb_lookup` with `--trace 1`.
   */
@@ -34,18 +31,7 @@ object Profile {
 
   private def time(queries: Seq[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", graft.Bench.DefaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "32m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build(logLevel = "ERROR")
     queries.foreach { q =>
       for (pass <- Seq("cold", "warm")) {
         val t0 = System.nanoTime()

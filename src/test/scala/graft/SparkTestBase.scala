@@ -3,22 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.Suite
 
-/** Shared local session for specs (getOrCreate — one JVM-wide session). */
+/** Shared local session for specs (one JVM-wide session). */
 trait SparkTestBase { this: Suite =>
   lazy val spark: SparkSession = SparkTestBase.session
   def sf(dir: String = "0.001"): String = s"/root/testdata/sf$dir"
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** Specs run on [[GraftSession]]'s confs at a fixed `local[4]`. */
+  val Cpus = 4
+  lazy val session: SparkSession = GraftSession.build(Cpus, logLevel = "ERROR")
 }

@@ -49,6 +49,7 @@ class ConcurrentStressSpec extends AnyFunSuite with SparkTestBase {
     else ignore(name)(body)
 
   stressTest("concurrent identical minhash pipelines never lose rows") {
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
     val stop = new AtomicBoolean(false)
     val noise = new Thread(() => {
       var i = 0
@@ -97,7 +98,7 @@ class ConcurrentStressSpec extends AnyFunSuite with SparkTestBase {
       stop.set(true)
       noise.join(30000)
       confNoise.join(30000)
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
+      spark.conf.set("spark.sql.shuffle.partitions", partitions)
       if (aqeOff) spark.conf.set("spark.sql.adaptive.enabled", "true")
       if (aqeExclude)
         spark.conf.unset("spark.sql.adaptive.optimizer.excludedRules")

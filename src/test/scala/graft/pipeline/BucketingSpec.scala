@@ -13,6 +13,7 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
   test("bucketed-by-hash tables join without a shuffle") {
     import spark.implicits._
     // default ./spark-warehouse (gitignored); warehouse.dir is static conf
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
 
     try {
@@ -42,7 +43,7 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
     } finally {
       spark.sql("DROP TABLE IF EXISTS db_a")
       spark.sql("DROP TABLE IF EXISTS db_b")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "32m")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     }
   }
 }

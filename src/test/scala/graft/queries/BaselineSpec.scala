@@ -35,6 +35,6 @@ class BaselineSpec extends AnyFunSuite {
     // 32-core baselines — Bench skips loading the table on a mismatch
     assert(graft.tools.BaselineGen.cpusOf(path.toString).contains(32),
       "BASELINE_QUERIES.json must carry _meta.cpus = 32 " +
-        "(regenerate with SPARK_GRAFT_CPUS unset or 32)")
+        "(regenerate with SPARK_GRAFT_CPUS=32, or unset on a 32-core box)")
   }
 }

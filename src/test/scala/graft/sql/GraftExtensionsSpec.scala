@@ -111,4 +111,20 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkTestBase {
          |    AS nfc_eq""".stripMargin).head()
     assert(!h.getAs[Boolean]("raw_eq") && h.getAs[Boolean]("nfc_eq"))
   }
+
+  test("DESCRIBE FUNCTION EXTENDED names each function's own class") {
+    GraftExtensions.register(spark)
+    Seq("graft_md5" -> "graft.sql.expressions.Digest",
+      "graft_vec_dot" -> "graft.sql.expressions.FloatVecDot",
+      "graft_nfc" -> "graft.sql.expressions.NfcNormalize",
+      "graft_nfkc" -> "graft.sql.expressions.NfcNormalize",
+      "graft_normalize" -> "org.apache.spark.sql.catalyst.expressions.StringTrim",
+      "graft_redact_pii" ->
+        "org.apache.spark.sql.catalyst.expressions.RegExpReplace").foreach {
+      case (fn, cls) =>
+        val lines = spark.sql(s"DESCRIBE FUNCTION EXTENDED $fn")
+          .collect().map(_.getString(0))
+        assert(lines.contains(s"Class: $cls"), s"$fn: ${lines.mkString(" | ")}")
+    }
+  }
 }
