@@ -3,108 +3,20 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Sketch-based distinct counting for corpus bookkeeping at 100 TB.
+/** Mergeable sketches for corpus bookkeeping at 100 TB: count-min
+  * (frequencies, join sizes), equi-width histograms (quantiles), Bloom
+  * bits (membership) and Misra–Gries summaries (heavy hitters).
   *
-  * An exact `countDistinct` over a corpus-scale column is a full shuffle
-  * of every distinct value; a cardinality REPORT (how many unique
-  * documents/shingles/urls per source, per day, overall) doesn't need
-  * exactness. Datasketches HLL (Spark's `hll_sketch_agg` family, codegen,
-  * map-side partials) gives ~±2% at lgK=12 for a few KB per group — and,
-  * critically, sketches MERGE: per-partition/per-day sketches union into
-  * rollups without touching the raw data again, which is what makes
-  * incremental corpus accounting possible (sketch today's shard, union
-  * with the running sketch; never re-scan history).
-  *
-  * Not DuckDB-oracle-able (different HLL implementations), so the
-  * contract is pinned by SketchesSpec: error bounds vs exact counts and
-  * exact associativity of the merge path.
+  * Each one is a bounded table (depth×width counters, `bins` rows, ≤ mBits
+  * rows, k rows) built in one pass with map-side partials, and each one
+  * MERGES without touching the raw data again: per-shard or per-day
+  * sketches roll up into a corpus sketch, which is what makes incremental
+  * accounting possible (sketch today's shard, merge with the running
+  * sketch; never re-scan history). The CMS and Bloom probes are md5 digit
+  * arithmetic, so the DuckDB oracle rebuilds the identical sketch;
+  * SketchesSpec pins the error bounds against exact counts.
   */
 object Sketches {
-
-  /** Per-group HLL sketch of `of`'s distinct values (binary column
-    * `sketch`). lgK = 12 → ~±2% relative standard error, ~4 KB/sketch.
-    */
-  def distinctSketch(
-      df: DataFrame, of: Column, groupBy: Seq[Column], lgK: Int = 12
-  ): DataFrame =
-    df.groupBy(groupBy: _*)
-      .agg(hll_sketch_agg(of, lit(lgK)).as("sketch"))
-
-  /** Merge per-group sketches (e.g. daily shards) into one sketch per
-    * coarser key — no raw data involved.
-    */
-  def mergeSketches(sketches: DataFrame, groupBy: Seq[Column]): DataFrame =
-    sketches.groupBy(groupBy: _*)
-      .agg(hll_union_agg(col("sketch")).as("sketch"))
-
-  /** Estimated distinct count from a sketch column. */
-  def estimate(sketch: Column): Column = hll_sketch_estimate(sketch)
-
-  /** One-shot approximate distinct per group (sketch + estimate). */
-  def approxDistinct(
-      df: DataFrame, of: Column, groupBy: Seq[Column], lgK: Int = 12
-  ): DataFrame =
-    distinctSketch(df, of, groupBy, lgK)
-      .withColumn("approx_distinct", estimate(col("sketch")))
-      .drop("sketch")
-
-  /** Rolling distinct cardinality — "unique users in the trailing
-    * `window` buckets, per bucket" — at sketch cost: ONE corpus pass
-    * builds a per-bucket HLL table (bucket-count-sized, tiny), then
-    * `hll_union_agg` runs as a WINDOW aggregate over a RANGE frame of
-    * the trailing buckets, so gaps in the bucket axis shorten the
-    * frame instead of silently widening it (a ROWS frame would span
-    * 24 *present* rows, not 24 hours). The trailing union re-merges
-    * each frame — cost = buckets × window sketch merges, all on the
-    * tiny table, never the corpus. The exact twin (offset-explode +
-    * count distinct) pays corpus × window rows; this pays corpus × 1.
-    *
-    * In: rows with a BIGINT `bucketCol`. Out: one row per observed
-    * bucket with `rolling_distinct` (estimate over [bucket-window+1,
-    * bucket]).
-    */
-  def rollingDistinct(
-      df: DataFrame, bucketCol: String, of: Column, window: Int = 24,
-      lgK: Int = 12
-  ): DataFrame = {
-    require(window >= 1)
-    val hourly = distinctSketch(df, of, Seq(col(bucketCol)), lgK)
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col(bucketCol))
-      .rangeBetween(-(window.toLong - 1), 0)
-    hourly
-      .withColumn("rolling_distinct",
-        estimate(hll_union_agg(col("sketch")).over(w)))
-      .drop("sketch")
-  }
-
-  /** Pairwise set-overlap estimates between groups from their HLL
-    * sketches alone — inclusion-exclusion over the union estimate:
-    * |A∩B| ≈ est(A) + est(B) − est(A∪B). The input is one sketch row
-    * per group (groups-sized, NOT data-sized), so the pairwise self-join
-    * is trivially small however big the underlying data was; sketch once
-    * while scanning, overlap any pair later without re-reading anything —
-    * the mergeable-sketch algebra that makes cross-corpus audits free at
-    * 100 TB. Exactness twin: q_text_vocab_overlap gates the same numbers
-    * exactly at test scale; SketchesSpec bounds this estimator against it.
-    *
-    * In: `(key, sketch)` rows from [[distinctSketch]].
-    * Out: `key_a, key_b (key_a < key_b), est_a, est_b, est_union,
-    * est_common` (clamped at ≥0 — inclusion-exclusion can go slightly
-    * negative on disjoint sets).
-    */
-  def sketchOverlap(sketches: DataFrame, keyCol: String = "key"): DataFrame = {
-    val a = sketches.select(col(keyCol).as("key_a"), col("sketch").as("_sa"))
-    val b = sketches.select(col(keyCol).as("key_b"), col("sketch").as("_sb"))
-    a.join(b, col("key_a") < col("key_b"))
-      .select(col("key_a"), col("key_b"),
-        hll_sketch_estimate(col("_sa")).as("est_a"),
-        hll_sketch_estimate(col("_sb")).as("est_b"),
-        hll_sketch_estimate(hll_union(col("_sa"), col("_sb")))
-          .as("est_union"))
-      .withColumn("est_common",
-        greatest(col("est_a") + col("est_b") - col("est_union"), lit(0L)))
-  }
 
   /** Count-min row/bucket for `value` in sketch row `row`: the first six
     * hex digits of md5("cms:row:value") mod `width`. md5-derived like the
@@ -121,13 +33,12 @@ object Sketches {
     * is the MIN over rows of its bucket's counter (always ≥ the true count;
     * error ≤ 2N/width with prob 1-2^-depth).
     *
-    * Like the HLL sketches above, CMS tables MERGE by summing counters
-    * bucket-wise ([[mergeCountMin]]) — per-shard sketches roll up into a
-    * corpus sketch without re-scanning raw data, which is what makes
-    * frequency accounting (stopword lists, heavy-hitter token tracking)
-    * incremental at 100 TB. The build is one groupBy over depth×N rows
-    * with map-side partials; the probe side joins against a table small
-    * enough to broadcast.
+    * CMS tables MERGE by summing counters bucket-wise — per-shard
+    * sketches roll up into a corpus sketch without re-scanning raw data,
+    * which is what makes frequency accounting (stopword lists,
+    * heavy-hitter token tracking) incremental at 100 TB. The build is one
+    * groupBy over depth×N rows with map-side partials; the probe side
+    * joins against a table small enough to broadcast.
     */
   def countMinSketch(
       df: DataFrame, of: Column, depth: Int = 4, width: Int = 1024
@@ -137,10 +48,6 @@ object Sketches {
           cmsBucket(of, r, width)): _*)).as(Seq("row", "bucket")))
       .groupBy("row", "bucket")
       .agg(count(lit(1)).as("cnt"))
-
-  /** Sum per-shard CMS tables counter-wise into one sketch. */
-  def mergeCountMin(sketches: DataFrame): DataFrame =
-    sketches.groupBy("row", "bucket").agg(sum(col("cnt")).as("cnt"))
 
   /** Equi-join size estimation by count-min inner product (the
     * AGMS/Cormode-Muthukrishnan estimator): the true size of A ⋈ₖ B is
@@ -154,8 +61,8 @@ object Sketches {
     * inputs). That's the point at 100 TB: join planning, skew triage,
     * and shuffle budgeting from two broadcast-sized counter tables,
     * with no scan of either input beyond the one pass that built the
-    * sketches (which shards/days can build incrementally and
-    * [[mergeCountMin]] fold together). BIGINT bound: Σ_w cntA·cntB <
+    * sketches (which shards/days can build incrementally and fold
+    * together by a bucket-wise sum). BIGINT bound: Σ_w cntA·cntB <
     * 2⁶³ per row, i.e. |A|·|B| < 2⁶³ — any real input.
     *
     * Out: one row `(join_size_est, depth)`.
@@ -173,13 +80,13 @@ object Sketches {
     * `bins` rows regardless of corpus size, one groupBy with map-side
     * partials to build. Out-of-domain values clamp into the edge bins.
     *
-    * The third mergeable-sketch family next to HLL (distincts) and CMS
-    * (frequencies): histogram tables MERGE by bucket-wise sum
-    * ([[mergeHistograms]]), so per-shard/per-day histograms roll up
-    * into corpus quantile estimates without re-scanning raw data — the
-    * alternative to an exact percentile's full sort at 100 TB. Unlike
-    * t-digest/KLL the bin layout is deterministic arithmetic, which is
-    * what lets a SQL oracle rebuild the identical sketch bit-for-bit.
+    * The second mergeable-sketch family next to CMS (frequencies):
+    * histogram tables MERGE by bucket-wise sum ([[mergeHistograms]]), so
+    * per-shard/per-day histograms roll up into corpus quantile estimates
+    * without re-scanning raw data — the alternative to an exact
+    * percentile's full sort at 100 TB. Unlike t-digest/KLL the bin layout
+    * is deterministic arithmetic, which is what lets a SQL oracle rebuild
+    * the identical sketch bit-for-bit.
     */
   def histogramSketch(
       df: DataFrame, of: Column, lo: Double, hi: Double, bins: Int
@@ -258,9 +165,9 @@ object Sketches {
 
   /** Distributed Bloom filter over `of`'s values, as the relational
     * SET-OF-SET-BITS (`bit` BIGINT, ≤ mBits rows, typically far fewer) —
-    * the fourth mergeable-sketch family next to HLL (distincts), CMS
-    * (frequencies) and histograms (quantiles), covering MEMBERSHIP: "was
-    * this content hash ever admitted?" without joining the full corpus.
+    * the third mergeable-sketch family next to CMS (frequencies) and
+    * histograms (quantiles), covering MEMBERSHIP: "was this content hash
+    * ever admitted?" without joining the full corpus.
     *
     * Mergeability is set UNION of the bits tables (dedup on `bit`) —
     * per-shard/per-day filters roll up into a corpus filter without
@@ -284,50 +191,6 @@ object Sketches {
     df.select(explode(array((0 until k).map(p =>
         bloomBit(of, p, mBits)): _*)).as("bit"))
       .distinct()
-
-  /** The word-packed Bloom build — the 10⁸+-bit scale path the
-    * relational [[bloomBits]] documents: the same md5 probe family, but
-    * bits pack 64-per-row into `(word, bits)` via a `bit_or` aggregate,
-    * so a 10⁹-bit filter is ~16M rows / ~250 MB instead of ~10⁹ rows.
-    * Merge is `bit_or` by word (still exactly Bloom OR); [[packWords]]
-    * converts a relational bits table to this form, and the two builds
-    * are bit-identical (asserted in SketchesSpec).
-    */
-  def bloomWordsBits(
-      df: DataFrame, of: Column, k: Int = 7, mBits: Int = 65536
-  ): DataFrame =
-    packWords(df.select(explode(array((0 until k).map(p =>
-        bloomBit(of, p, mBits)): _*)).as("bit")))
-
-  /** Pack a relational `bit` table into 64-bit words: (word, bits). */
-  def packWords(bits: DataFrame): DataFrame =
-    bits.distinct()
-      .select(expr("bit div 64").as("word"),
-        expr("shiftleft(1L, cast(bit % 64 AS int))").as("_m"))
-      .groupBy("word")
-      .agg(expr("bit_or(_m)").as("bits"))
-
-  /** [[bloomScreen]] over the word-packed form: probes join on their
-    * word and test their mask bit; the all-k fold is unchanged. Same
-    * broadcast shape — the packed table is 64× smaller.
-    */
-  def bloomScreenWords(
-      df: DataFrame, keyCol: String, value: Column, words: DataFrame,
-      k: Int = 7, mBits: Int = 65536, flag: String = "might_contain"
-  ): DataFrame = {
-    val probes = df.select(col(keyCol).as("_bk"),
-      explode(array((0 until k).map(p => bloomBit(value, p, mBits)): _*))
-        .as("bit"))
-      .select(col("_bk"), expr("bit div 64").as("word"),
-        expr("shiftleft(1L, cast(bit % 64 AS int))").as("_m"))
-    val hits = probes
-      .join(broadcast(words), Seq("word"), "left")
-      .groupBy("_bk")
-      .agg((sum(when(col("bits").isNotNull &&
-        (col("bits").bitwiseAND(col("_m")) === col("_m")), 1L)
-        .otherwise(0L)) === k).as(flag))
-    df.join(hits, df(keyCol) === hits("_bk")).drop("_bk")
-  }
 
   /** Screen `df` against a Bloom bits table: appends `might_contain` —
     * true iff ALL k probe positions of `value` are set. One k-way
@@ -388,9 +251,9 @@ object Sketches {
     * exact counts: counter-wise sum, then one [[mgSubtract]] reduction.
     * Associative in the mergeable-summaries sense (the ERROR BOUND
     * composes: undercount after any merge tree ≤ n_total/(k+1)); the
-    * exact counter values depend on merge order, which is why the
-    * streaming wrapper fixes batch order and the oracle replays the
-    * same chain. Cost per merge: the batch count pass + a top-(k+1)
+    * exact counter values depend on merge order, which is why
+    * q_events_heavy_hitters fixes its batch order and the oracle replays
+    * the same chain. Cost per merge: the batch count pass + a top-(k+1)
     * selection — history is NEVER recounted.
     */
   def mgMerge(prev: DataFrame, batchCounts: DataFrame, k: Int,
@@ -399,13 +262,4 @@ object Sketches {
       prev.unionByName(batchCounts)
         .groupBy(keyCol).agg(sum(col(cntCol)).as(cntCol)),
       k, keyCol, cntCol)
-
-  /** One-shot Misra–Gries over a frame: exact count pass (map-side
-    * combinable) + one reduction. */
-  def mgSummary(df: DataFrame, key: Column, k: Int,
-      keyCol: String = "key"): DataFrame =
-    mgSubtract(
-      df.select(key.as(keyCol)).groupBy(keyCol)
-        .agg(count(lit(1)).as("c")),
-      k, keyCol, "c")
 }

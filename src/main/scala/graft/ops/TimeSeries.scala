@@ -364,8 +364,7 @@ object TimeSeries {
     *
     * Shape: one per-key window + one map-side-combinable aggregate;
     * output is key-domain-sized. Skewed power keys are absorbed the
-    * same way every per-user window here is (`ops/Skew` if one key
-    * dominates a partition).
+    * same way every per-user window here is.
     *
     * Out: `(key, n_gaps, mean_gap_ms, cv2_bp, flag_bot)`.
     */

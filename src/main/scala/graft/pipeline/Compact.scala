@@ -102,41 +102,6 @@ object Compact {
     Result(files.size, stamped.files, stamped.records)
   }
 
-  /** Compact ANY parquet dataset directory to ~`targetBytes` files,
-    * clustered by `sortCols` (range partition + within-partition sort —
-    * empty keeps arrival order). The hash-db entry point [[run]] adds
-    * schema enforcement, blooms, hive-layout preservation, and catalog
-    * re-stamping on top of the same core; this generic form serves the
-    * datasets a pipeline accretes in small appends — e.g.
-    * [[graft.streaming.StreamingDedup]]'s per-batch signature-index and
-    * corpus files — where per-file open/footer overhead otherwise grows
-    * with every micro-batch. Same rename-aside crash discipline.
-    */
-  def runGeneric(
-      spark: SparkSession, path: String, sortCols: Seq[String] = Seq.empty,
-      targetBytes: Long = 128L << 20,
-      options: Map[String, String] = Map("compression" -> "zstd")
-  ): Result = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val files = dataFiles(spark, path)
-    if (files.isEmpty) return Result(0, 0, 0L)
-    val totalBytes = files.map(_.getLen).sum
-    val want = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    if (files.size <= want + 1) {
-      return Result(files.size, files.size, spark.read.parquet(path).count())
-    }
-    val df = spark.read.parquet(path)
-    val sorted =
-      if (sortCols.isEmpty) df.repartition(want)
-      else df.repartitionByRange(want, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
-    sorted.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .options(options).parquet(path + "_compacting")
-    swapInPlace(spark, path, path + "_compacting")
-    Result(files.size, dataFiles(spark, path).size,
-      spark.read.parquet(path).count())
-  }
-
   /** Rename-aside swap: old data moves to `<db>_old`, the stage renames
     * in, `_old` is deleted last — a crash at any point leaves either the
     * old or the new dataset at the path, never neither.

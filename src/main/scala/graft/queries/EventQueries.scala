@@ -797,9 +797,7 @@ object EventQueries extends QueryGroup {
     // is not a frame aggregate either engine runs exactly, so the exact
     // form is the offset-explode: each (user, hour, n) contributes to
     // the 24 windows it falls in, then ONE groupBy per window end.
-    // Work = hourly-pair volume × window, linear in the corpus. The
-    // sketch-cost variant (corpus × 1 + tiny-table window merges) is
-    // Sketches.rollingDistinct, estimate-vs-exact-gated in its spec.
+    // Work = hourly-pair volume × window, linear in the corpus.
     "q_events_rolling_distinct" -> QueryDef(
       (s, d) => {
         val pairs = Tables.events(s, d)

@@ -422,10 +422,8 @@ object TextQueries extends QueryGroup {
     ),
 
     // Pairwise vocabulary overlap between sources (src0..src4 → 10
-    // pairs), computed EXACTLY: the oracle twin of the HLL
-    // inclusion-exclusion estimator (Sketches.sketchOverlap), which
-    // SketchesSpec bounds against these numbers. The tok equi-join is
-    // vocabulary-keyed — the scale shape; jaccard in integer bp (DIV).
+    // pairs), computed EXACTLY. The tok equi-join is vocabulary-keyed —
+    // the scale shape; jaccard in integer bp (DIV).
     "q_text_vocab_overlap" -> QueryDef(
       (s, d) => {
         val vocab = Tables.documents(s, d)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.pipeline.BuildJob
@@ -70,61 +70,4 @@ object StreamingBuild {
         ()
       }
       .start()
-
-  /** Event-time tumbling-window aggregation with watermarked late-data
-    * handling — the streaming twin of q_events_hourly_window.
-    */
-  def windowedEventCounts(
-      events: DataFrame,
-      windowLength: String = "1 hour",
-      watermark: String = "10 minutes"
-  ): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-      .select(
-        col("window.start").as("window_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
-
-  /** Watermarked stream-stream interval join: each click matched to the
-    * same-user views it follows within `within`. Both sides carry
-    * watermarks AND the join condition carries a two-sided time bound, so
-    * Spark can size the join state: view rows are retained only until
-    * `view_ts + within` falls behind the click watermark, click rows to
-    * their own watermark — bounded state at any stream length, the
-    * canonical streaming-attribution shape with no batch backfill.
-    *
-    * Works identically on batch frames (no watermark semantics in batch,
-    * same inner join) — the parity spec runs this one function both ways.
-    */
-  def viewClickJoin(
-      views: DataFrame, // view_user, view_id, view_ts
-      clicks: DataFrame, // click_user, click_id, click_ts
-      within: String = "10 minutes",
-      watermark: String = "30 minutes"
-  ): DataFrame =
-    views.withWatermark("view_ts", watermark)
-      .join(clicks.withWatermark("click_ts", watermark),
-        expr(s"""view_user = click_user AND
-                 click_ts >= view_ts AND
-                 click_ts <= view_ts + INTERVAL $within"""))
-      .select(col("view_user").as("user_id"), col("view_id"),
-        col("click_id"), col("view_ts"), col("click_ts"))
-
-  /** Stateful per-user session counts over a stream (the streaming twin of
-    * q_events_sessions, using session_window instead of lag()).
-    */
-  def sessionCounts(
-      events: DataFrame,
-      gap: String = "30 minutes",
-      watermark: String = "1 hour"
-  ): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(
-        col("session_window.start").as("session_start"),
-        col("user_id"), col("n_events"))
 }

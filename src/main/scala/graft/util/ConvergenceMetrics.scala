@@ -25,14 +25,6 @@ object ConvergenceMetrics {
       "; result may be a superset/approximation — raise the round cap")
   }
 
-  /** Record a non-loop observed hazard `op` (counted under the same
-    * registry so dashboards/tests read one surface).
-    */
-  def record(op: String, detail: String): Unit = {
-    counters.computeIfAbsent(op, _ => new AtomicLong()).incrementAndGet()
-    log.warn(s"graft: $op: $detail")
-  }
-
   /** Unconverged-exit count for `op` since JVM start (0 if never). */
   def unconvergedCount(op: String): Long =
     Option(counters.get(op)).map(_.get()).getOrElse(0L)

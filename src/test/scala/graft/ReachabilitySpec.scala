@@ -1,0 +1,134 @@
+package graft
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Regrowth gate for code nothing reaches: every non-private member `def`
+  * of an object in the library packages must be named, as a whole word,
+  * in program code other than its own `def` — a registered query, the
+  * CLI, a tool, a pipeline job or the benchmark. A spec alone does not
+  * count as a caller, and neither does a comment: scaladoc that names a
+  * function does not keep it alive.
+  */
+class ReachabilitySpec extends AnyFunSuite {
+
+  private val Packages =
+    Seq("ops", "streaming", "util", "pipeline", "sources", "sql", "core")
+  // Python cannot call a Scala def, so only .scala files are callers
+  private val CallerRoots = Seq("src/main", "tools", "perfbench")
+
+  /** Members that stay without a program caller, each with its reason. */
+  private val allowed = Map(
+    "StreamingBuild.runWatermarked" ->
+      ("the bounded-state streaming build behind aim 3's crash/restart " +
+        "claim (ROADMAP item 4 keeps it); StreamingSpec drives it"),
+    "StreamingDrift.compactCounts" ->
+      ("the crash-safe staged-swap compaction of the count log (CountLog) " +
+        "behind aim 3's restart claim; StreamingDriftSpec drives it"),
+    "StreamingQuantiles.compactCounts" ->
+      ("the same CountLog staged swap for the histogram log; " +
+        "StreamingQuantilesSpec drives it"),
+    "ConvergenceMetrics.unconvergedCount" ->
+      ("test hook for unconverged loop exits until ROADMAP item 2 " +
+        "replaces the channel with observed metrics"))
+
+  private def read(p: Path) =
+    new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+
+  private def scalaFiles(root: Path): Seq[Path] =
+    if (!Files.isDirectory(root)) Seq.empty
+    else Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        !p.iterator().asScala.exists(_.toString == "target"))
+      .toSeq
+
+  /** `src` with `//` and (nested) `/* */` comments blanked, newlines
+    * kept. String and char literals are copied as they are, so a
+    * "s3a://" URL stays code.
+    */
+  private def stripComments(src: String): String = {
+    val out = new StringBuilder(src.length)
+    val n = src.length
+    var i = 0
+    def at(s: String) = src.startsWith(s, i)
+    while (i < n) {
+      if (at("\"\"\"")) {
+        val j = src.indexOf("\"\"\"", i + 3)
+        val end = if (j < 0) n else j + 3
+        out ++= src.substring(i, end); i = end
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < n && src(j) != '"' && src(j) != '\n')
+          j += (if (src(j) == '\\') 2 else 1)
+        val end = math.min(j + 1, n)
+        out ++= src.substring(i, end); i = end
+      } else if (src(i) == '\'' && i + 2 < n && src(i + 2) == '\'') {
+        out ++= src.substring(i, i + 3); i += 3 // 'x', including '"'
+      } else if (src(i) == '\'' && i + 3 < n && src(i + 1) == '\\' &&
+          src(i + 3) == '\'') {
+        out ++= src.substring(i, i + 4); i += 4 // '\x'
+      } else if (at("//")) {
+        while (i < n && src(i) != '\n') i += 1
+      } else if (at("/*")) {
+        var depth = 0
+        while (i < n && (depth > 0 || at("/*"))) {
+          if (at("/*")) { depth += 1; i += 2 }
+          else if (at("*/")) { depth -= 1; i += 2 }
+          else { if (src(i) == '\n') out.append('\n'); i += 1 }
+        }
+      } else {
+        out.append(src(i)); i += 1
+      }
+    }
+    out.toString
+  }
+
+  private val Word = """(def\s+)?([A-Za-z_][\w$]*)""".r
+  private val ObjectLine = """^(?:case )?object (\w+)\b.*""".r
+  private val MemberDef = """^  ((?:[\w\[\]@]+\s+)*)def\s+([A-Za-z_][\w$]*).*""".r
+
+  /** (object, def) for each non-private, non-override member `def` of a
+    * top-level object (the repo's two-space member indentation).
+    */
+  private def memberDefs(code: String): Seq[(String, String)] = {
+    var obj: Option[String] = None
+    code.split("\n").toSeq.flatMap {
+      case ObjectLine(name) => obj = Some(name); None
+      case l if l.nonEmpty && !l.head.isWhitespace => obj = None; None
+      case MemberDef(mods, name)
+          if obj.isDefined &&
+            !Seq("private", "protected", "override").exists(mods.contains) =>
+        obj.map(_ -> name)
+      case _ => None
+    }
+  }
+
+  test("every public object member in the library packages has a caller " +
+    "in program code") {
+    val main = Paths.get("src/main/scala/graft")
+    assume(Files.isDirectory(main), "source tree present")
+    val callers = CallerRoots.flatMap(r => scalaFiles(Paths.get(r)))
+      .map(p => stripComments(read(p)))
+    val defs = Packages.flatMap(p => scalaFiles(main.resolve(p)))
+      .flatMap(p => memberDefs(stripComments(read(p))))
+      .distinct
+    assert(defs.size > 200, s"scan found only ${defs.size} member defs")
+    // every whole word in caller code that is not itself a `def name`
+    val used = callers.flatMap(c => Word.findAllMatchIn(c)
+      .collect { case m if m.group(1) == null => m.group(2) }).toSet
+    val unreached = defs.collect {
+      case (o, d) if !used(d) => s"$o.$d"
+    }.toSet
+    val stale = allowed.keySet -- unreached
+    assert(stale.isEmpty, "allowlisted but now called (drop the entry): " +
+      stale.toSeq.sorted.map(k => s"$k — ${allowed(k)}").mkString("; "))
+    val missing = (unreached -- allowed.keySet).toSeq.sorted
+    if (missing.nonEmpty)
+      fail("no caller under src/main, tools or perfbench (delete it with " +
+        "its spec, or allowlist it with a reason):\n" + missing.mkString("\n"))
+  }
+}

@@ -26,14 +26,29 @@ class FunctionsSpec extends AnyFunSuite with SparkTestBase {
 
   test("digest() interpreted path (codegen off) agrees with codegen path") {
     import spark.implicits._
-    val words = Seq("a", "", "unicode-é-字").toDF("w")
-    def run(codegen: String) = {
-      spark.conf.set("spark.sql.codegen.wholeStage", codegen)
-      try words.select(digestHex("blake3", col("w")), digestHex("keccak256", col("w")))
-        .collect().map(_.toSeq).toSeq
-      finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    }
-    assert(run("true") == run("false"))
+    // RDD rows: over a Seq.toDF relation ConvertToLocalRelation folds the
+    // projection interpretively, and both runs would be eval (as in
+    // KernelEvalArmSpec). The pure-Scala digests are the ones at risk.
+    val words = spark.sparkContext.parallelize(Seq("a", "", "unicode-é-字"), 2)
+      .toDF("w")
+    def run() = words
+      .select(Seq("blake3", "keccak256", "ripemd160")
+        .map(a => digestHex(a, col("w"))): _*)
+      .collect().map(_.toSeq).toSeq
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    val previous = keys.map(k => k -> spark.conf.getOption(k))
+    val codegen = run()
+    val eval =
+      try {
+        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        run()
+      } finally previous.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    assert(codegen.size == 3)
+    assert(codegen == eval)
   }
 
   test("digest() of binary column and null handling") {

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 
 /** Crash + restart injection for the flatMapGroupsWithState session
-  * operator — the third stateful-streaming op under failure test
-  * (StreamingDedup: crash between appends; StreamingCusum: checkpoint
+  * operator — a stateful-streaming op under failure test next to
+  * StreamingDedup (crash between appends) and StreamingBuild (checkpoint
   * restart). The specific bug class this pins: losing the OPEN-session
   * state across a restart, which splits one real session into two
   * emitted rows (an analytics-corrupting, silently-plausible failure).
