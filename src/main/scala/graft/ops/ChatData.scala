@@ -298,10 +298,10 @@ object ChatData {
     *
     * Scale shape: the model state is raters×K² confusion cells + K
     * priors — broadcast-sized by construction, the ONLY state carried
-    * between rounds besides the item-label frame (localCheckpoint'd per
-    * round, flat lineage). Per round: one ratings×labels item-keyed
-    * equi-join, one map-side-combinable cell count, one ratings×cells
-    * broadcast join (fan-out K per rating), one item-keyed argmax.
+    * between rounds besides the item-label frame. Per round: one
+    * ratings×labels item-keyed equi-join, one map-side-combinable cell
+    * count, one ratings×cells broadcast join (fan-out K per rating), one
+    * item-keyed argmax.
     * BIGINT bounds: |score| ≤ (raters+1)·2²⁴ ≪ 2⁶³ at any corpus size.
     *
     * In: (itemCol, raterCol, labelCol) with labels in 0..nClasses−1.
@@ -316,12 +316,12 @@ object ChatData {
     val r = ratings.select(col(itemCol).as("_it"), col(raterCol).as("_r"),
       col(labelCol).cast("long").as("_l")).localCheckpoint(true)
     // majority init: per-item argmax count, ties → smallest label
-    var cur = r.groupBy("_it", "_l").agg(count(lit(1)).as("_c"))
+    val cur0 = r.groupBy("_it", "_l").agg(count(lit(1)).as("_c"))
       .groupBy("_it")
       .agg(min(struct((-col("_c")).as("nc"), col("_l").as("l"))).as("_b"))
       .select(col("_it"), col("_b.l").as("_t"))
       .localCheckpoint(true)
-    val nItems = cur.count()
+    val nItems = cur0.count()
     val lNk = TextAnalysis.pseudoLog2Long(nItems + k)
     // dense (rater × true × given) domain: smoothing must reach cells
     // with ZERO observations or absent combos silently drop from scores
@@ -330,8 +330,7 @@ object ChatData {
       .withColumn("_l", explode(sequence(lit(0L), lit(k - 1))))
       .localCheckpoint(true) // raters×K², reused every round
     val tDom = r.sparkSession.range(k).select(col("id").as("_t"))
-    var scored: DataFrame = null
-    for (_ <- 1 to rounds) {
+    val labeled = graft.util.Loop.rounds(cur0, rounds) { (cur, _) =>
       val conf = dense.join(
         r.join(cur, "_it").groupBy("_r", "_t", "_l")
           .agg(count(lit(1)).as("_c")),
@@ -359,18 +358,16 @@ object ChatData {
         "_pp1", "_lp")
         .select(col("_t"), (col("_lp") - lit(lNk)).as("_pw"))
         .localCheckpoint(true)
-      scored = r.join(broadcast(w), Seq("_r", "_l"))
+      r.join(broadcast(w), Seq("_r", "_l"))
         .groupBy("_it", "_t").agg(sum(col("_w")).as("_sw"))
         .join(broadcast(prior), "_t")
         .withColumn("_s", col("_sw") + col("_pw"))
-      cur = scored
         .groupBy("_it")
         .agg(min(struct((-col("_s")).as("ns"), col("_t").as("l"))).as("_b"))
         .select(col("_it"), col("_b.l").as("_t"),
           (-col("_b.ns")).as("_score"))
-        .localCheckpoint(true)
     }
-    cur.select(col("_it").as(itemCol), col("_t").as("label"),
+    labeled.select(col("_it").as(itemCol), col("_t").as("label"),
       col("_score").as("score_fp"))
   }
 
@@ -398,8 +395,8 @@ object ChatData {
     * Shape: the comparison log collapses to a directed (i, j, games)
     * table bounded by K² (items are MODELS/policies/sources — thousands,
     * not corpus rows); each round is two broadcast-sized joins + one
-    * K-row aggregate, lineage-truncated per round. The one driver-side
-    * materialization is K itself (the normalization constant).
+    * K-row aggregate. The one value collected is K itself (the
+    * normalization constant).
     *
     * Out: `(item, strength_micro, rank, n_wins, n_games)`.
     */
@@ -421,9 +418,9 @@ object ChatData {
       .na.fill(0L, Seq("n_wins"))
       .localCheckpoint(true)
     val k = items.count() // K models — bounded by construction
-    var w = items.select(col("item"), lit(1000000L).as("w"))
+    val w0 = items.select(col("item"), lit(1000000L).as("w"))
       .localCheckpoint(true)
-    for (_ <- 1 to iters) {
+    val strengths = graft.util.Loop.rounds(w0, iters) { (w, _) =>
       val s = d
         .join(w.select(col("item").as("i"), col("w").as("_wi")), Seq("i"))
         .join(w.select(col("item").as("j"), col("w").as("_wj")), Seq("j"))
@@ -437,12 +434,11 @@ object ChatData {
           expr("if(_s is null or _s <= 0, w, " +
             "n_wins * 1000000000000L div _s)"))
         .select("item", "_u")
-      w = u.crossJoin(u.agg(sum(col("_u")).as("_tot"))) // one-row broadcast
+      u.crossJoin(u.agg(sum(col("_u")).as("_tot"))) // one-row broadcast
         .select(col("item"),
           expr(s"_u * ${k * 1000000L}L div _tot").as("w"))
-        .localCheckpoint(true)
     }
-    w.join(items, Seq("item"))
+    strengths.join(items, Seq("item"))
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("w").desc, col("item"))).cast("long")) // K rows only

@@ -58,18 +58,6 @@ object Decontaminate {
         length(col("w")).as("span_len"))
   }
 
-  /** The corpus minus every document contaminated by any benchmark —
-    * anti-join on the flagged ids.
-    */
-  def clean(
-      docs: DataFrame, benchmarks: DataFrame,
-      n: Int = 5, minHits: Long = 1L
-  ): DataFrame = {
-    val flagged = contaminationPairs(docs, benchmarks, n, minHits)
-      .select("doc_id").distinct()
-    docs.join(flagged, Seq("doc_id"), "left_anti")
-  }
-
   /** SEMANTIC decontamination: corpus items whose embedding is
     * ≥ `thresholdBp` cosine-close to any benchmark embedding — catches
     * paraphrased/translated benchmark leakage that n-gram collision

@@ -482,8 +482,8 @@ object Dedup {
     * the cheaper shortcut formulation). Near-clique dedup blobs — the
     * norm — converge in cycle 1 and verify in cycle 2, so they never
     * pay the shortcut join at all. `maxIter` (propagation rounds)
-    * bounds the worst case; an unconverged exit is signalled via
-    * [[graft.util.ConvergenceMetrics]].
+    * bounds the worst case; each convergence cycle is one
+    * [[graft.util.Loop]] round, so an unconverged exit is counted there.
     *
     * Returns (doc_id, cluster_id) for every node that appears in a pair;
     * docs absent from `pairs` are implicitly their own cluster.
@@ -502,10 +502,8 @@ object Dedup {
     val edges = p.select(col("i").as("a"), col("j").as("b"))
       .union(p.select(col("j").as("a"), col("i").as("b")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.groupBy(col("a").as("doc_id"))
+    val labels0 = edges.groupBy(col("a").as("doc_id"))
       .agg(least(min(col("b")), first(col("a"))).as("cluster_id"))
-    var iter = 0
-    var converged = false
     // `keepPrev` carries the INPUT label alongside the output one, so
     // the convergence check below is a plain filter over the
     // checkpointed round — it used to be a labels×labels shuffle join
@@ -537,50 +535,35 @@ object Dedup {
           coalesce(col("_gp"), col("cluster_id")).as("cluster_id")) ++
           extra: _*)
     }
-    while (iter < maxIter && !converged) {
-      // two propagation rounds per convergence check: dedup clusters are
-      // near-cliques (diameter ≤ 2 is the norm), so checking every round
-      // just doubles the job count. The eager localCheckpoint both
-      // materializes the round AND truncates the logical plan — without it
-      // the lineage doubles per round and Catalyst/AQE re-analyze the whole
-      // growing tree on every convergence check (the r2 bench's heaviest
-      // cost). Checkpoint blocks are reclaimed by the ContextCleaner when
-      // superseded frames go out of scope; the label frame is one row per
-      // paired doc — tiny relative to the edge data.
-      // the shortcut only pays off on components deeper than the hops
-      // plain cycles walk, so it stays off until cycle 3: near-clique
-      // corpora (the dedup norm) fully resolve in cycle 1 and verify in
-      // cycle 2 — they never pay the extra join at all (measured r5
-      // parity on the clusters-derived battery queries) — while
-      // chain-shaped components still get the O(log diameter) law from
-      // cycle 3 on (reach 2, 4, then r → 2(r+2) per cycle).
-      // convergence = the OUTER propagate (and the shortcut) changed
-      // nothing. That is a fixed point of propagate: label(a) ≤
-      // label(b) for every edge (a,b) in BOTH directions (edges are
-      // undirected), hence labels are constant per component — fully
-      // converged, the same final labels the old start-of-cycle
-      // comparison reached (possibly one cycle sooner when the last
-      // movement happens in the INNER round). `_prev` rides inside the
-      // checkpointed frame, so the check is a filter over materialized
-      // blocks — no join, no shuffle.
-      val stepped = propagate(propagate(labels), keepPrev = true)
-      val next = (if (iter >= 4) shortcut(stepped) else stepped)
-        .localCheckpoint(true)
-      val changed = next.filter(col("cluster_id") =!= col("_prev"))
-        .limit(1).count()
-      labels = next.drop("_prev")
-      converged = changed == 0
-      iter += 2
-    }
-    // an exit at maxIter with labels still moving means some component's
-    // diameter exceeds the propagation horizon (min-label moves one hop
-    // per round): the labels are then an over-segmentation of the true
-    // components — near-dup chains longer than ~2·maxIter hops (heavily
-    // templated corpora) come back as several clusters. Signal it (WARN +
-    // observed metric) instead of returning silently.
-    if (!converged)
-      graft.util.ConvergenceMetrics.unconvergedExit("duplicateClusters",
-        iter, "labels still changing; long-diameter component suspected")
+    // two propagation rounds per convergence check: dedup clusters are
+    // near-cliques (diameter ≤ 2 is the norm), so checking every round
+    // just doubles the job count. The label frame is one row per paired
+    // doc — tiny relative to the edge data.
+    // the shortcut only pays off on components deeper than the hops
+    // plain cycles walk, so it stays off until cycle 3: near-clique
+    // corpora (the dedup norm) fully resolve in cycle 1 and verify in
+    // cycle 2 — they never pay the extra join at all (measured parity
+    // on the clusters-derived battery queries) — while chain-shaped
+    // components still get the O(log diameter) law from cycle 3 on
+    // (reach 2, 4, then r → 2(r+2) per cycle).
+    // convergence = the OUTER propagate (and the shortcut) changed
+    // nothing. That is a fixed point of propagate: label(a) ≤
+    // label(b) for every edge (a,b) in BOTH directions (edges are
+    // undirected), hence labels are constant per component — fully
+    // converged. `_prev` rides inside the checkpointed frame, so the
+    // check is a filter over materialized blocks — no join, no shuffle.
+    // An exit at the cap with labels still moving means some
+    // component's diameter exceeds the propagation horizon (min-label
+    // moves one hop per round): the labels are then an over-segmentation
+    // of the true components — near-dup chains longer than ~2·maxIter
+    // hops (heavily templated corpora) come back as several clusters.
+    val labels = graft.util.Loop.until("duplicateClusters", labels0,
+        (maxIter + 1) / 2) { (labels, cycle) =>
+      val stepped = propagate(propagate(labels.drop("_prev")), keepPrev = true)
+      if (cycle >= 3) shortcut(stepped) else stepped
+    } { next =>
+      next.filter(col("cluster_id") =!= col("_prev")).limit(1).count() == 0
+    }.drop("_prev")
     // the returned frame is checkpointed — it no longer depends on this
     // (p's checkpoint blocks are reclaimed by the ContextCleaner on GC)
     edges.unpersist(false)

@@ -2,19 +2,18 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.Loop
 
 /** Iterative graph algorithms as DataFrame loops — the distributed
   * power-method family (PageRank/TextRank centrality).
   *
   * Scale shape: one equi-join (edges × ranks on the source key) plus one
   * grouped aggregation (contributions by destination) per iteration —
-  * the classic Pregel-as-joins formulation. The rank frame is
-  * `localCheckpoint`ed every round so lineage (and Catalyst re-analysis
-  * cost) stays flat regardless of iteration count, the same discipline
-  * as the dedup cluster propagation and BPE training loops. Edges are
-  * the big side and stream through a hash join keyed on `u`; ranks are
-  * vertex-sized. Iteration count is fixed (power method converges
-  * geometrically — 4-10 rounds is the standard working range).
+  * the classic Pregel-as-joins formulation, rounds driven by
+  * [[graft.util.Loop]]. Edges are the big side and stream through a hash
+  * join keyed on `u`; ranks are vertex-sized. Iteration count is fixed
+  * (power method converges geometrically — 4-10 rounds is the standard
+  * working range).
   *
   * Engine-replayability: ranks are FIXED-POINT micro-units (BIGINT,
   * 1.0 = 1e6), so the per-vertex contribution sum is exact integer
@@ -49,7 +48,39 @@ object Graph {
     * |V| · max(w) ≲ 9e12 — e.g. a 1M-word vocabulary with co-occurrence
     * weights up to ~9M, far beyond any real adjacency graph.
     */
-  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame =
+    rank(edges, None, iters, damping).drop("is_seed")
+
+  /** Personalized PageRank — topic expansion from a seed vocabulary:
+    * the teleport mass returns ONLY to the seeds
+    * (r_v = [v∈S]·(1−d)·Micro + d·Σ_u r_u·w_uv/w_u), so rank flows
+    * outward from the seed set through the graph and the TOP NON-SEED
+    * nodes are the topic's natural neighborhood — seed-lexicon growth,
+    * query expansion, related-entity mining. Same unnormalized
+    * fixed-point integer recurrence and cost profile as [[pageRank]];
+    * the seed set is a tiny broadcast.
+    *
+    * Contract: nodes only hold rank while they RECEIVE edges, so run it
+    * on (effectively) undirected graphs — the co-occurrence graphs this
+    * library builds — where every seed with any edge keeps collecting
+    * its teleport term; seeds absent from the graph contribute nothing.
+    * Init: seeds at Micro, everything else 0 (documented — `iters` is a
+    * fixed replayable round count, not convergence).
+    *
+    * Out: `(tok, r, is_seed)` with r micro-scaled to double like
+    * [[pageRank]].
+    */
+  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
+      iters: Int, damping: Double = 0.85): DataFrame =
+    rank(edges, Some(seeds), iters, damping)
+
+  /** The one rank loop: `(tok, r, is_seed)` after `iters` rounds, with the
+    * teleport term going to the `seeds` only, or to every vertex when
+    * there are none ([[pageRank]]: then no seed join is planned, and the
+    * BIGINT recurrence is exactly the unpersonalized one).
+    */
+  private def rank(edges: DataFrame, seeds: Option[DataFrame],
+      iters: Int, damping: Double): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val dNum = math.round(damping * 1000)
     require(dNum >= 0 && dNum <= 1000, s"damping out of [0,1]: $damping")
@@ -64,79 +95,32 @@ object Graph {
     val withShare = e.join(outW, "u")
       .select(col("u"), col("v"), col("w"), col("wu"))
       .localCheckpoint(true)
-    var ranks = withShare.select(col("u").as("tok")).distinct()
-      .withColumn("r", lit(Micro))
+    val (withSeeds, isSeed) = seeds match {
+      case None => ((df: DataFrame) => df, lit(true))
+      case Some(s) =>
+        val seedSet = s.select(col("tok")).distinct()
+          .withColumn("_seed", lit(1L)).localCheckpoint(true)
+        ((df: DataFrame) => df.join(broadcast(seedSet), Seq("tok"), "left"),
+          col("_seed").isNotNull)
+    }
+    val base = (1000L - dNum) * (Micro / 1000L)
+    val r0 = withSeeds(withShare.select(col("u").as("tok")).distinct())
+      .select(col("tok"), when(isSeed, lit(Micro)).otherwise(lit(0L)).as("r"))
       .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      ranks = withShare
+    val ranks = Loop.rounds(r0, iters) { (ranks, _) =>
+      withSeeds(withShare
         .join(ranks, withShare("u") === ranks("tok"))
         // `div` = integral division; every operand is non-negative, so
-        // truncation IS the floor in the recurrence above
+        // truncation IS the floor in [[pageRank]]'s recurrence
         .select(col("v"), expr("r * w div wu").as("c"))
         .groupBy("v")
         .agg(sum(col("c")).as("s"))
-        .select(col("v").as("tok"),
-          (lit((1000L - dNum) * (Micro / 1000L)) +
-            expr(s"($dNum * s) div 1000")).as("r"))
-        .localCheckpoint(true)
+        .select(col("v").as("tok"), expr(s"($dNum * s) div 1000").as("_p")))
+        .select(col("tok"),
+          (when(isSeed, lit(base)).otherwise(lit(0L)) + col("_p")).as("r"))
     }
-    ranks.select(col("tok"), (col("r") / lit(Micro.toDouble)).as("r"))
-  }
-
-  /** Personalized PageRank — topic expansion from a seed vocabulary:
-    * the teleport mass returns ONLY to the seeds
-    * (r_v = [v∈S]·(1−d)·Micro + d·Σ_u r_u·w_uv/w_u), so rank flows
-    * outward from the seed set through the graph and the TOP NON-SEED
-    * nodes are the topic's natural neighborhood — seed-lexicon growth,
-    * query expansion, related-entity mining. Same unnormalized
-    * fixed-point integer recurrence, per-round lineage truncation, and
-    * cost profile as [[pageRank]]; the seed set is a tiny broadcast.
-    *
-    * Contract: nodes only hold rank while they RECEIVE edges, so run it
-    * on (effectively) undirected graphs — the co-occurrence graphs this
-    * library builds — where every seed with any edge keeps collecting
-    * its teleport term; seeds absent from the graph contribute nothing.
-    * Init: seeds at Micro, everything else 0 (documented — `iters` is a
-    * fixed replayable round count, not convergence).
-    *
-    * Out: `(tok, r, is_seed)` with r micro-scaled to double like
-    * [[pageRank]].
-    */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-      iters: Int, damping: Double = 0.85): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val dNum = math.round(damping * 1000)
-    require(dNum >= 0 && dNum <= 1000, s"damping out of [0,1]: $damping")
-    val e = edges.localCheckpoint(true)
-    val outW = e.groupBy("u").agg(sum(col("w")).as("wu"))
-    val withShare = e.join(outW, "u")
-      .select(col("u"), col("v"), col("w"), col("wu"))
-      .localCheckpoint(true)
-    val seedSet = seeds.select(col("tok")).distinct()
-      .withColumn("_seed", lit(1L)).localCheckpoint(true)
-    val base = (1000L - dNum) * (Micro / 1000L)
-    var ranks = withShare.select(col("u").as("tok")).distinct()
-      .join(broadcast(seedSet), Seq("tok"), "left")
-      .withColumn("r",
-        when(col("_seed").isNotNull, lit(Micro)).otherwise(lit(0L)))
-      .select("tok", "r")
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      ranks = withShare
-        .join(ranks, withShare("u") === ranks("tok"))
-        .select(col("v"), expr("r * w div wu").as("c"))
-        .groupBy("v")
-        .agg(sum(col("c")).as("s"))
-        .select(col("v").as("tok"), expr(s"($dNum * s) div 1000").as("_p"))
-        .join(broadcast(seedSet), Seq("tok"), "left")
-        .withColumn("r",
-          expr(s"if(_seed is not null, ${base}L, 0L) + _p"))
-        .select("tok", "r")
-        .localCheckpoint(true)
-    }
-    ranks.join(broadcast(seedSet), Seq("tok"), "left")
-      .select(col("tok"), (col("r") / lit(Micro.toDouble)).as("r"),
-        col("_seed").isNotNull.as("is_seed"))
+    withSeeds(ranks).select(col("tok"),
+      (col("r") / lit(Micro.toDouble)).as("r"), isSeed.as("is_seed"))
   }
 
   /** TextRank keyword scoring: PageRank over the corpus's word-adjacency
@@ -167,6 +151,86 @@ object Graph {
     pageRank(edges, iters, damping)
   }
 
+  /** k-core decomposition by iterative peeling (Seidman 1983): rounds
+    * of "drop nodes with degree < k, recompute" until a FIXED POINT —
+    * the densest-substructure filter behind spam-ring and community-core
+    * detection. Each round is one degree aggregation + two semi-joins;
+    * the loop stops when a round removes no edge (peeling is monotone,
+    * so an unchanged edge count IS convergence: degrees are then stable
+    * and every further round is the identity). `maxRounds` is a safety
+    * cap for pathological long-chain cascades (a length-L path at k=2
+    * peels ~L/2 rounds); hitting it unconverged logs a WARN and counts
+    * an unconverged exit in [[graft.util.Loop]] — the result is then a
+    * SUPERSET of the true k-core, never an undercount.
+    * An engine replaying a fixed round count ≥ the convergence round
+    * reproduces the result exactly (idempotence). Edges normalize/dedup
+    * like [[triangles]]. Returns surviving nodes with in-core degree.
+    *
+    * Scale: per round, degree is a map-side-combinable count and the
+    * filters are broadcast-able once the core shrinks; the convergence
+    * check is a count on the just-checkpointed round.
+    */
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 32): DataFrame = {
+    require(k >= 1 && maxRounds >= 1)
+    val e0 = edges.filter(col("u") =!= col("v"))
+      .select(least(col("u"), col("v")).as("a"),
+        greatest(col("u"), col("v")).as("b"))
+      .distinct()
+      .localCheckpoint(true)
+    var edgeCount = e0.count()
+    val e = if (edgeCount == 0L) e0 else
+      Loop.until("kCore", e0, maxRounds) { (e, _) =>
+        val deg = e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
+          .groupBy("n").agg(count(lit(1)).as("d"))
+        val keep = deg.filter(col("d") >= k).select("n")
+        e.join(keep.select(col("n").as("a")), "a")
+          .join(keep.select(col("n").as("b")), "b")
+          .select("a", "b")
+      } { e =>
+        val cur = e.count()
+        val settled = cur == edgeCount || cur == 0L
+        edgeCount = cur
+        settled
+      }
+    e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
+      .groupBy("n").agg(count(lit(1)).as("core_degree"))
+  }
+
+  /** Community detection by synchronous label propagation (Raghavan et
+    * al. 2007), deterministic form: labels start as node ids; each
+    * round every node adopts the most frequent label among its
+    * neighbors, ties to the SMALLEST label; fixed `rounds` rounds (the
+    * usual 3-5 suffice on social-style graphs, and a fixed count is
+    * what makes the run engine-replayable — asynchronous/random-order
+    * LPA is not). Unlike connected components, dense local structure
+    * beats mere reachability, so bridged clusters separate.
+    *
+    * Each round: one edges×labels equi-join, one (node, label) count,
+    * one argmax — all map-side-combinable. Returns (node, community).
+    */
+  def labelPropagation(edges: DataFrame, rounds: Int = 4): DataFrame = {
+    val e = edges.filter(col("u") =!= col("v"))
+      .select(least(col("u"), col("v")).as("a"),
+        greatest(col("u"), col("v")).as("b"))
+      .distinct()
+      .localCheckpoint(true)
+    val both = e.select(col("a").as("n"), col("b").as("m"))
+      .unionAll(e.select(col("b").as("n"), col("a").as("m")))
+      .localCheckpoint(true)
+    val labels0 = both.select(col("n")).distinct()
+      .select(col("n"), col("n").as("lbl"))
+      .localCheckpoint(true)
+    val labels = Loop.rounds(labels0, rounds) { (labels, _) =>
+      both
+        .join(labels.select(col("n").as("m"), col("lbl")), "m")
+        .groupBy("n", "lbl").agg(count(lit(1)).as("c"))
+        .groupBy("n")
+        .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("_b"))
+        .select(col("n"), col("_b.l").as("lbl"))
+    }
+    labels.select(col("n").as("node"), col("lbl").as("community"))
+  }
+
   /** Per-node triangle counts and local clustering coefficient over an
     * undirected edge list (columns `u`, `v`) — the community-structure
     * signal (how clique-like each node's neighborhood is) behind spam
@@ -187,94 +251,6 @@ object Graph {
     * clustering_bp = ⌊2·T(v)·10⁴ / (d(v)·(d(v)−1))⌋, 0 where degree < 2.
     * Pure integer arithmetic — any engine replays it exactly.
     */
-  /** k-core decomposition by iterative peeling (Seidman 1983): rounds
-    * of "drop nodes with degree < k, recompute" until a FIXED POINT —
-    * the densest-substructure filter behind spam-ring and community-core
-    * detection. Each round is one degree aggregation + two semi-joins;
-    * the loop stops when a round removes no edge (peeling is monotone,
-    * so an unchanged edge count IS convergence: degrees are then stable
-    * and every further round is the identity). `maxRounds` is a safety
-    * cap for pathological long-chain cascades (a length-L path at k=2
-    * peels ~L/2 rounds); hitting it unconverged records an observed
-    * metric + WARN via [[graft.util.ConvergenceMetrics]] — the result
-    * is then a SUPERSET of the true k-core, never an undercount.
-    * An engine replaying a fixed round count ≥ the convergence round
-    * reproduces the result exactly (idempotence). Edges normalize/dedup
-    * like [[triangles]]. Returns surviving nodes with in-core degree.
-    *
-    * Scale: per round, degree is a map-side-combinable count and the
-    * filters are broadcast-able once the core shrinks; lineage is cut
-    * per round with localCheckpoint so round count never grows the
-    * plan, and the convergence check is a count on the just-checkpointed
-    * (already materialized) frame — no extra lineage replay.
-    */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 32): DataFrame = {
-    require(k >= 1 && maxRounds >= 1)
-    var e = edges.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
-    var prev = e.count()
-    var rounds = 0
-    var converged = prev == 0L
-    while (!converged && rounds < maxRounds) {
-      val deg = e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-      val keep = deg.filter(col("d") >= k).select("n")
-      e = e.join(keep.select(col("n").as("a")), "a")
-        .join(keep.select(col("n").as("b")), "b")
-        .select("a", "b")
-        .localCheckpoint(true)
-      val cur = e.count()
-      converged = cur == prev || cur == 0L
-      prev = cur
-      rounds += 1
-    }
-    if (!converged)
-      graft.util.ConvergenceMetrics.unconvergedExit("kCore", maxRounds,
-        s"k=$k, ${prev} edges still peeling")
-    e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("core_degree"))
-  }
-
-  /** Community detection by synchronous label propagation (Raghavan et
-    * al. 2007), deterministic form: labels start as node ids; each
-    * round every node adopts the most frequent label among its
-    * neighbors, ties to the SMALLEST label; fixed `rounds` rounds (the
-    * usual 3-5 suffice on social-style graphs, and a fixed count is
-    * what makes the run engine-replayable — asynchronous/random-order
-    * LPA is not). Unlike connected components, dense local structure
-    * beats mere reachability, so bridged clusters separate.
-    *
-    * Each round: one edges×labels equi-join, one (node, label) count,
-    * one argmax — all map-side-combinable; labels localCheckpoint per
-    * round (flat lineage). Returns (node, community).
-    */
-  def labelPropagation(edges: DataFrame, rounds: Int = 4): DataFrame = {
-    val e = edges.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val both = e.select(col("a").as("n"), col("b").as("m"))
-      .unionAll(e.select(col("b").as("n"), col("a").as("m")))
-      .localCheckpoint(true)
-    var labels = both.select(col("n")).distinct()
-      .select(col("n"), col("n").as("lbl"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      labels = both
-        .join(labels.select(col("n").as("m"), col("lbl")), "m")
-        .groupBy("n", "lbl").agg(count(lit(1)).as("c"))
-        .groupBy("n")
-        .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("_b"))
-        .select(col("n"), col("_b.l").as("lbl"))
-        .localCheckpoint(true)
-    }
-    labels.select(col("n").as("node"), col("lbl").as("community"))
-  }
-
   def triangles(edges: DataFrame): DataFrame = {
     // canonical undirected edge set (dedup both directions + self-loops)
     val e = graft.util.AutoUnpersist.persistScoped(

@@ -766,9 +766,10 @@ object Similarity {
       .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
       .select(col("query_id"), lit(r).as("mmr_rank"), col("cand_id"),
         col("cos_bp"), col("_score").as("mmr_u"))
-    var out = pick(base.withColumn("_score", lit(lambdaBp) * col("cos_bp")),
+    val first = pick(base.withColumn("_score", lit(lambdaBp) * col("cos_bp")),
       1).localCheckpoint(true)
-    for (r <- 2 to kOut) {
+    // round r of the loop picks rank r + 1
+    graft.util.Loop.rounds(first, kOut - 1) { (out, r) =>
       val selIds = out.select(col("query_id"), col("cand_id").as("_j"))
       val maxSim = sims.join(selIds, Seq("query_id", "_j"))
         .groupBy(col("query_id"), col("_i").as("cand_id"))
@@ -778,9 +779,8 @@ object Similarity {
       val scored = rem.join(maxSim, Seq("query_id", "cand_id"), "left")
         .withColumn("_score", lit(lambdaBp) * col("cos_bp") -
           lit(10000L - lambdaBp) * coalesce(col("_mx"), lit(0L)))
-      out = out.unionByName(pick(scored, r)).localCheckpoint(true)
+      out.unionByName(pick(scored, r + 1))
     }
-    out
   }
 
   /** Cluster-prototype difficulty pruning — the data-selection rule of

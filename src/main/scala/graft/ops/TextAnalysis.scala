@@ -562,9 +562,9 @@ object TextAnalysis {
     *
     * Scale shape: the corpus is touched ONCE (word-frequency groupBy);
     * every round after that works on the vocabulary table, which is
-    * orders of magnitude smaller and `localCheckpoint`ed per round to
-    * keep lineage flat. Only the single best (pair, count) row reaches
-    * the driver per round.
+    * orders of magnitude smaller. Only the single best (pair, count) row
+    * is collected per round, and training stops at the first round that
+    * finds no pair left.
     *
     * Merge semantics: symbols live space-separated with sentinel spaces
     * at both ends; a round applies TWO sentinel-bounded `replace` passes,
@@ -582,15 +582,15 @@ object TextAnalysis {
     val spark = docs.sparkSession
     import spark.implicits._
     // word-frequency table, symbolized: "abc" -> "a b c"
-    var words = docs
+    val words0 = docs
       .select(explode(tokens(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("freq"))
       .select(trim(regexp_replace(col("tok"), "(.)", "$1 ")).as("w"), col("freq"))
       .localCheckpoint(true)
-    val merges = Seq.newBuilder[(Int, String, String, String, Long)]
-    for (step <- 1 to nMerges) {
+    // the most frequent adjacent pair of a symbolized table, if any
+    def bestPair(words: DataFrame): Option[(String, Long)] = {
       val s = col("_s")
-      val best = words
+      words
         .withColumn("_s", split(col("w"), " "))
         .filter(size(s) >= 2)
         .select(col("freq"), explode(
@@ -600,27 +600,30 @@ object TextAnalysis {
         .groupBy("pair").agg(sum(col("freq")).as("n"))
         .orderBy(desc("n"), asc("pair"))
         .limit(1).collect()
-      if (best.nonEmpty) {
-        val (pair, n) = (best(0).getString(0), best(0).getLong(1))
+        .headOption.map(r => (r.getString(0), r.getLong(1)))
+    }
+    val merges =
+      scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
+    // the pair the next round merges: found on the round before it, so
+    // training settles as soon as no pair is left, or the budget is spent
+    var next = if (nMerges >= 1) bestPair(words0) else None
+    if (next.nonEmpty)
+      graft.util.Loop.until("bpeTrain", words0, nMerges) { (words, step) =>
+        val (pair, n) = next.get
         val Array(l, r) = pair.split(" ", 2)
         val merged = l + r
         merges += ((step, l, r, merged, n))
         // literal (non-regex) replace — same left-to-right non-overlapping
         // semantics as SQL replace(), which is what the oracle replays
-        def once(c: Column): Column = {
-          import org.apache.spark.sql.graftshim.GraftShim
-          GraftShim.column(
-            org.apache.spark.sql.catalyst.expressions.StringReplace(
-              GraftShim.expression(c),
-              GraftShim.expression(lit(" " + pair + " ")),
-              GraftShim.expression(lit(" " + merged + " "))))
-        }
-        words = words
-          .withColumn("w", trim(once(once(concat(lit(" "), col("w"), lit(" "))))))
-          .localCheckpoint(true)
+        def once(c: Column) =
+          litReplace(c, " " + pair + " ", " " + merged + " ")
+        words.withColumn("w",
+          trim(once(once(concat(lit(" "), col("w"), lit(" "))))))
+      } { words =>
+        next = if (merges.length == nMerges) None else bestPair(words)
+        next.isEmpty
       }
-    }
-    merges.result().toDF("step", "left", "right", "merged", "pair_count")
+    merges.toSeq.toDF("step", "left", "right", "merged", "pair_count")
   }
 
   /** Literal (non-regex) replace with SQL `replace()` left-to-right

@@ -117,35 +117,31 @@ object UnigramTokenizer {
       rounds: Int = 2, minSeedFreq: Long = 3L
   ): DataFrame = {
     require(rounds >= 1 && maxWordLen >= 1 && pieceLen >= 1)
-    // every stage below is vocabulary-sized; eager localCheckpoints cut
-    // the lineage between EM stages — without them round r's plan
-    // embeds round r−1's ENTIRE unrolled DP tree and Catalyst/codegen
-    // time, not data, dominates (measured 11.9 s → 3.3 s at sf0.1, a
-    // 31-word vocabulary — the BPE/PageRank flat-lineage discipline)
+    // every stage below is vocabulary-sized
     val m = melt(words(docs, maxWordLen), maxWordLen, pieceLen)
       .localCheckpoint(true)
     val chars = m.filter(col("k") === 1).select("piece").distinct()
     val seed = m.groupBy("piece").agg(sum("freq").as("cnt"))
       .filter(col("cnt") >= minSeedFreq || length(col("piece")) === 1)
-    var scores = score(seed).localCheckpoint(true)
-    var seg: DataFrame = null
-    for (r <- 1 to rounds) {
-      seg = viterbi(m, scores, maxWordLen, pieceLen).localCheckpoint(true)
-      if (r < rounds) {
-        val usage = seg
-          .select(col("freq"),
-            explode(split(expr("substring(seg, 2)"), "\\|")).as("piece"))
-          .groupBy("piece").agg(sum("freq").as("cnt"))
-        val floorChars = chars
-          .join(usage.select("piece"), Seq("piece"), "left_anti")
-          .withColumn("cnt", lit(1L))
-        scores = score(usage.unionByName(floorChars)).localCheckpoint(true)
-      }
+    val seedScores = score(seed).localCheckpoint(true)
+    // rounds − 1 re-scorings, each from the pieces the current scores'
+    // segmentation uses; the last Viterbi pass only segments. A pass is
+    // an unrolled DP plan, so it is materialized before anything reads it.
+    val scores = graft.util.Loop.rounds(seedScores, rounds - 1) { (scores, _) =>
+      val usage = viterbi(m, scores, maxWordLen, pieceLen).localCheckpoint(true)
+        .select(col("freq"),
+          explode(split(expr("substring(seg, 2)"), "\\|")).as("piece"))
+        .groupBy("piece").agg(sum("freq").as("cnt"))
+      val floorChars = chars
+        .join(usage.select("piece"), Seq("piece"), "left_anti")
+        .withColumn("cnt", lit(1L))
+      score(usage.unionByName(floorChars))
     }
-    seg.select(col("word"), col("freq"),
-      (size(split(col("seg"), "\\|")) - 1).as("n_pieces"),
-      expr("substring(seg, 2)").as("seg"),
-      col("cost").as("cost_l16"))
+    viterbi(m, scores, maxWordLen, pieceLen).localCheckpoint(true)
+      .select(col("word"), col("freq"),
+        (size(split(col("seg"), "\\|")) - 1).as("n_pieces"),
+        expr("substring(seg, 2)").as("seg"),
+        col("cost").as("cost_l16"))
   }
 
   /** Apply a trained model to a corpus: per doc, word and piece totals

@@ -4395,11 +4395,12 @@ object TextQueries extends QueryGroup {
   }
 
   /** DuckDB replay of [[graft.ops.Graph.textRank]]: the word-adjacency
-    * graph (both-direction bigram counts), then `iters` unrolled PageRank
-    * rounds. Each round's contribution sum is an ordered left-fold
-    * (`list_reduce(list(c ORDER BY u))`) — bit-equal to Spark's
-    * `aggregate(sort_array(collect_list))` since fold(0.0, [c1..cn]) and
-    * fold-from-first agree exactly (0.0 + c1 == c1 in IEEE).
+    * graph (both-direction bigram counts), then `iters` unrolled rounds of
+    * [[graft.ops.Graph.pageRank]]'s fixed-point recurrence. Ranks are
+    * BIGINT micro-units, each edge's contribution floor-divides by its
+    * source's out-weight and the damped mix floor-divides by 1000, so
+    * every intermediate is exact integer arithmetic and the sum order is
+    * free. One division by 1e6 at the end turns micro-units into ranks.
     */
   private def textRankSql(iters: Int): String = {
     val sb = new StringBuilder
@@ -4421,10 +4422,6 @@ object TextQueries extends QueryGroup {
              |r0 AS MATERIALIZED (
              |  SELECT DISTINCT u AS tok, CAST(1000000 AS BIGINT) AS r
              |  FROM edges)""".stripMargin
-    // fixed-point replay of Graph.pageRank: ranks are BIGINT micro-units,
-    // contributions floor-divide per edge, the damped mix floor-divides by
-    // 1000 — every intermediate is exact integer arithmetic, so the sum
-    // order is free and no list_reduce fold-order pin is needed
     for (k <- 1 to iters) {
       sb ++= s""",
                |r$k AS MATERIALIZED (

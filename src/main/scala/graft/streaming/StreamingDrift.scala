@@ -21,9 +21,9 @@ import graft.ops.TextAnalysis
   *   - `countsPath`: append-only per-batch token counts
   *     `(tok, c, batch_id)` — counts are MERGEABLE, so the running
   *     distribution is a sum over appends and history is never
-  *     re-tokenized; at high batch counts compact this table exactly
-  *     like any log-structured store (`Compact`), the sums are
-  *     associative.
+  *     re-tokenized. The sums are associative, so the caller compacts
+  *     the log with [[compactCounts]] at high batch counts; nothing here
+  *     compacts it on its own.
   *   - `ledgerPath`: one row per batch
   *     `(batch_id, jsd_millibits, kl_pm_millibits, kl_qm_millibits,
   *     n_vocab_a, n_vocab_shared, n_tokens, alarm)`.
@@ -45,17 +45,6 @@ object StreamingDrift {
       batchId: Long, jsdMillibits: Long, alarm: Boolean,
       nVocab: Long, nTokens: Long)
 
-  /** Finish or roll back a [[compactCounts]] staged swap that a crash
-    * left half-done — see [[CountLog.recoverSwap]] (the shared
-    * machinery; this delegate keeps the drift monitor's call sites and
-    * StreamingDriftSpec's injections anchored here). Called on entry to
-    * BOTH [[driftBatch]] and [[compactCounts]], so whichever runs first
-    * after a crash heals the table before the watermark reads it.
-    */
-  private[streaming] def recoverSwap(
-      fs: org.apache.hadoop.fs.FileSystem, countsPath: String): Unit =
-    CountLog.recoverSwap(fs, countsPath)
-
   /** One micro-batch (or one batch-mode shard) through the monitor. */
   def driftBatch(
       batch: DataFrame, // columns: doc_id long, text string
@@ -66,24 +55,11 @@ object StreamingDrift {
     val spark = batch.sparkSession
     val fs = new Path(countsPath)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    recoverSwap(fs, countsPath)
-
-    // idempotent counts append: a redelivered batch_id never lands
-    // twice. The seen-check is a WATERMARK (batch ids are monotone
-    // under foreachBatch), not per-id membership, so [[compactCounts]]
-    // can collapse history to one row per token — stamped with the max
-    // compacted batch id — without forgetting what already landed.
-    val haveCounts = fs.exists(new Path(countsPath))
-    val seen = haveCounts && {
-      val wm = spark.read.parquet(countsPath)
-        .agg(max(col("batch_id"))).collect()(0)
-      !wm.isNullAt(0) && wm.getLong(0) >= batchId
-    }
-    if (!seen) {
-      TextAnalysis.tokenCountTable(batch.dropDuplicates("doc_id"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode(SaveMode.Append).parquet(countsPath)
-    }
+    // idempotent counts append: first heals a half-done [[compactCounts]]
+    // swap, then skips a batch id the watermark has passed, so a
+    // redelivered batch never lands twice, compacted history included
+    CountLog.append(TextAnalysis.tokenCountTable(batch.dropDuplicates("doc_id")),
+      countsPath, batchId)
 
     // ledger idempotence + crash self-heal: recompute-and-append only
     // if this batch's row is missing (deterministic from stored counts)
@@ -120,7 +96,7 @@ object StreamingDrift {
     * the watermark idempotence rule in [[driftBatch]] keeps rejecting
     * redeliveries of everything already folded in. Staged-swap write
     * (temp dir + double rename); a crash at ANY point is repaired by
-    * [[recoverSwap]] on the next entry — mid-swap crashes can leave
+    * [[CountLog.recoverSwap]] on the next entry (of either method) — mid-swap crashes can leave
     * the canonical path briefly absent, so recovery (not the swap
     * alone) is what makes this crash-safe. Ledger rows are untouched —
     * past drift readings are immutable history.

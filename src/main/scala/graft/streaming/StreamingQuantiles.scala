@@ -12,9 +12,10 @@ import graft.ops.Sketches
   * append-only count log and one ledger row records the RUNNING p50/
   * p95/p99 (the latency/size/score dashboard row every intake
   * publishes). Histogram counts are MERGEABLE sums, so the running
-  * distribution never re-reads history, the log compacts to `bins`
-  * rows ([[CountLog.compact]] — the drift monitor's staged swap +
-  * crash recovery), and state is bins-bounded forever.
+  * distribution is a sum over the log. The log gains one row set per
+  * batch and is compacted to `bins` rows only when the caller runs
+  * [[compactCounts]] ([[CountLog.compact]] — the drift monitor's staged
+  * swap + crash recovery); nothing here compacts it on its own.
   *
   * Exactly-once under foreachBatch redelivery by the [[CountLog]]
   * watermark (counts) and recompute-if-missing (ledger): a crash

@@ -65,7 +65,7 @@ class DedupPropertySpec extends AnyFunSuite with SparkTestBase {
     }
     val want = parent.keys.map(v => v -> find(v)).toMap
 
-    graft.util.ConvergenceMetrics.reset("duplicateClusters")
+    val exits = graft.util.Loop.unconvergedCount("duplicateClusters")
     // worst diameter here is 49 (a 50-node chain): the deferred-shortcut
     // reach law (2, 4, 12, 28, 60, …) covers it in 5 cycles and the
     // convergence check needs one more no-change cycle — 12 rounds
@@ -74,7 +74,7 @@ class DedupPropertySpec extends AnyFunSuite with SparkTestBase {
     assert(got == want,
       s"component labels diverge on ${got.toSet.diff(want.toSet).take(5)}")
     assert(
-      graft.util.ConvergenceMetrics.unconvergedCount("duplicateClusters") == 0,
+      graft.util.Loop.unconvergedCount("duplicateClusters") - exits == 0,
       "all generated shapes must converge inside maxIter=14 with doubling")
   }
 

@@ -112,18 +112,17 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     // endpoints, so full dissolution takes ~11 rounds — the structure the
     // old rounds=6 default silently returned a superset for
     val path = (1L until 24L).map(i => (i, i + 1)).toDF("u", "v")
-    graft.util.ConvergenceMetrics.reset("kCore")
+    def exits() = graft.util.Loop.unconvergedCount("kCore")
+    val before = exits()
     assert(graft.ops.Graph.kCore(path, k = 2).count() == 0,
       "a path has no 2-core; fixed-point peeling must dissolve it fully")
-    assert(graft.util.ConvergenceMetrics.unconvergedCount("kCore") == 0,
+    assert(exits() - before == 0,
       "default cap must converge without a signal")
     // with a deliberately-too-low cap, the superset comes back AND the
     // unconverged exit is signalled
-    graft.util.ConvergenceMetrics.reset("kCore")
     assert(graft.ops.Graph.kCore(path, k = 2, maxRounds = 3).count() > 0)
-    assert(graft.util.ConvergenceMetrics.unconvergedCount("kCore") == 1,
+    assert(exits() - before == 1,
       "capped exit must record an unconverged-exit metric")
-    graft.util.ConvergenceMetrics.reset("kCore")
   }
 
   test("duplicateClusters: a chain past the propagation horizon signals " +
@@ -136,31 +135,28 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     // the loop must exit signalling unconverged, and the labels are
     // over-segmented.
     val longChain = (1L until 2000L).map(i => (i, i + 1)).toDF("i", "j")
-    graft.util.ConvergenceMetrics.reset("duplicateClusters")
+    def exits() = graft.util.Loop.unconvergedCount("duplicateClusters")
+    val before = exits()
     val labels = graft.ops.Dedup.duplicateClusters(longChain, maxIter = 10)
     assert(labels.select("cluster_id").distinct().count() > 1,
       "past-horizon chain must come back over-segmented (that's the hazard)")
-    assert(
-      graft.util.ConvergenceMetrics.unconvergedCount("duplicateClusters") == 1,
+    assert(exits() - before == 1,
       "unconverged exit must be recorded, not silent")
     // doubling makes the fix CHEAP: 24 propagation rounds (12 cycles;
     // reach 2, 4, 12, 28, 60, 124, 252, 508, 1020, 2044 — crosses 1999
     // by cycle 10) fully resolve the 1999-diameter chain — the linear
     // law would need ~4000 rounds. One cluster, no signal.
-    graft.util.ConvergenceMetrics.reset("duplicateClusters")
+    val capped = exits()
     val full = graft.ops.Dedup.duplicateClusters(longChain, maxIter = 24)
     assert(full.select("cluster_id").distinct().count() == 1,
       "log-round propagation must resolve the full chain")
     assert(full.filter("cluster_id <> 1").count() == 0)
-    assert(
-      graft.util.ConvergenceMetrics.unconvergedCount("duplicateClusters") == 0)
+    assert(exits() - capped == 0)
     // a near-clique blob (the normal dedup shape) converges silently
     val blob = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("i", "j")
     val got = graft.ops.Dedup.duplicateClusters(blob, maxIter = 10)
     assert(got.select("cluster_id").distinct().count() == 1)
-    assert(
-      graft.util.ConvergenceMetrics.unconvergedCount("duplicateClusters") == 0)
-    graft.util.ConvergenceMetrics.reset("duplicateClusters")
+    assert(exits() - capped == 0)
   }
 
   test("labelPropagation: two cliques over one bridge resolve to two " +
