@@ -2,19 +2,21 @@ package graft.pipeline
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Small-file compaction for built hash databases.
+/** File-count compaction for built hash databases.
   *
-  * Long append histories leave a database as many small parquet files
-  * (every `BuildJob.run(append = true)` writes at least one); at object-
-  * store scale that means per-file open/footer overhead on every query
-  * and a metadata crawl per stats call. Compaction rewrites the dataset
-  * into ⌈total bytes / targetBytes⌉ files while PRESERVING the layout
-  * contract: a global range-partitioned sort by `hash`, so per-file
-  * min/max ranges and bloom filters keep serving prefix/exact pruning
-  * exactly as BuildJob wrote them, and the sidecar + `shaha:*` footers
-  * are re-stamped so both catalogs stay correct.
+  * A database whose files are many and small — built with a large
+  * `numFiles` or a small `maxRecordsPerFile`, or grown by streaming
+  * micro-batch appends (each append rewrites the whole database in the
+  * build's own file count) — pays per-file open/footer overhead on every
+  * query at object-store scale, and a metadata crawl per stats call.
+  * Compaction rewrites the dataset into ⌈total bytes / targetBytes⌉ files
+  * while PRESERVING the layout contract: the build's digest-prefix tiling
+  * ([[BuildJob.Tiling]]) over that many tiles, each sorted by `hash`, so
+  * per-file min/max ranges and bloom filters keep serving prefix/exact
+  * pruning exactly as BuildJob wrote them. The writer stamps fresh footer
+  * blooms on a bloom-stamped db, and the sidecar + `shaha:*` footers are
+  * re-stamped so both catalogs stay correct.
   *
   * Same staging discipline as append builds: write to `<db>_compacting`,
   * rename the old database aside to `<db>_old`, rename the stage in, and
@@ -70,35 +72,32 @@ object Compact {
     // detect from the paths (robust even without the original Config) and
     // preserve both the directory layout and the (algorithm, hash)
     // clustering so algorithm-pruned reads keep working after compaction.
-    val hiveLayout = cfg.partitionByAlgorithm ||
-      files.exists(_.getPath.getParent.getName.startsWith("algorithm="))
+    val dirAlgorithms = files.map(_.getPath.getParent.getName).distinct
+      .collect { case d if d.startsWith("algorithm=") => d.stripPrefix("algorithm=") }
+    val hiveLayout = cfg.partitionByAlgorithm || dirAlgorithms.nonEmpty
     // a bloom-stamped db keeps its footer blooms through compaction —
-    // the rewrite invalidates per-file bitmaps, so they are recomputed
-    // for the new file set after the swap
+    // the rewrite invalidates per-file bitmaps, so the writer stamps new
+    // ones on the new file set
     val hadBlooms = cfg.footerBloom ||
       FooterMeta.readBlooms(spark, db).exists(_._2.isDefined)
     val meta = SidecarMeta.read(spark, db)
     val df = spark.read.schema(BuildJob.schema).parquet(db)
     val stage = db + "_compacting"
-    val sorted =
-      if (hiveLayout)
-        df.repartitionByRange(want, col("algorithm"), col("hash"))
-          .sortWithinPartitions("algorithm", "hash")
-      else
-        df.repartitionByRange(want, col("hash")).sortWithinPartitions("hash")
-    val writer = sorted
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .option("parquet.bloom.filter.enabled#hash", "true")
-      .option("parquet.bloom.filter.expected.ndv#hash", cfg.bloomNdv.toString)
-    (if (hiveLayout) writer.partitionBy("algorithm") else writer).parquet(stage)
+    // the build's tiling over `want` tiles; the `algorithm=` layout ranks
+    // every algorithm that names a directory or the catalog
+    val tiling = BuildJob.Tiling(want,
+      if (!hiveLayout) Nil
+      else (dirAlgorithms ++ meta.toSeq.flatMap(_.algorithms) ++ cfg.algorithms)
+        .distinct.sorted)
+    BuildJob.writer(tiling(df), hiveLayout, hadBlooms, cfg.bloomNdv).save(stage)
 
     swapInPlace(spark, db, stage)
 
-    // one footer finalize re-stamps the catalog and the blooms together;
-    // the rewritten files' footer row counts give the record count
+    // the writer stamped the blooms; one footer finalize re-stamps the
+    // catalog, and the rewritten files' footer row counts give the record
+    // count
     meta.foreach(SidecarMeta.write(spark, db, _))
-    val stamped = FooterMeta.stamp(spark, db, meta, blooms = hadBlooms)
+    val stamped = FooterMeta.stamp(spark, db, meta, blooms = false)
     Result(files.size, stamped.files, stamped.records)
   }
 

@@ -50,15 +50,8 @@ final class FooterBloom(
   private val Prime = 0xffffffffffffffc5L // largest 64-bit prime
 
   /** SipHash-1-3 of the item with Rust `Vec<u8>` length-prefix framing. */
-  private def sip(which: Int, item: Array[Byte]): Long = {
-    val framed = new Array[Byte](8 + item.length)
-    val n = item.length.toLong
-    var j = 0
-    while (j < 8) { framed(j) = ((n >>> (8 * j)) & 0xff).toByte; j += 1 }
-    System.arraycopy(item, 0, framed, 8, item.length)
-    if (which == 0) SipHash.hash13(keys._1, keys._2, framed)
-    else SipHash.hash13(keys._3, keys._4, framed)
-  }
+  private def sip(which: Int, item: Array[Byte]): Long =
+    FooterBloom.sip(keys, which, FooterBloom.framed(item))
 
   @inline private def bitAt(idx: Long): Boolean =
     ((bitmap((idx >>> 3).toInt) >> (7 - (idx & 7)).toInt) & 1) == 1
@@ -86,15 +79,21 @@ final class FooterBloom(
   def mightContain(item: Array[Byte]): Boolean = probe(item)(bitAt)
 
   def add(item: Array[Byte]): Unit = {
+    val framed = FooterBloom.framed(item)
+    addHashes(FooterBloom.sip(keys, 0, framed), FooterBloom.sip(keys, 1, framed))
+  }
+
+  /** [[add]] for an item whose two base hashes h0, h1 are already known
+    * (under this bloom's keys).
+    */
+  def addHashes(h0: Long, h1: Long): Unit = {
     // the write side always sets all writeK probes, even when `items` was
     // constructed smaller — mirrors the crate's writer
-    var h0 = 0L
-    var h1 = 0L
     var i = 0
     while (i < writeK) {
       val g =
-        if (i == 0) { h0 = sip(0, item); h0 }
-        else if (i == 1) { h1 = sip(1, item); h1 }
+        if (i == 0) h0
+        else if (i == 1) h1
         else java.lang.Long.remainderUnsigned(h0 + i.toLong * h1, Prime)
       setBit(java.lang.Long.remainderUnsigned(g, bits))
       i += 1
@@ -118,6 +117,10 @@ object FooterBloom {
   val KeyBitmap = "shaha:bloom_bitmap"
   val KeyKeys = "shaha:bloom_keys"
   val KeyItems = "shaha:bloom_items"
+  /** graft's footer blooms are sized for at least this many items… */
+  val MinCapacity = 100000L
+  /** …at the reference's fixed false-positive rate (parquet.rs:29). */
+  val Fp = 0.01
 
   /** The crate's write-side probe count for a target fp:
     * k = ceil(log2(1/fp)).
@@ -148,12 +151,35 @@ object FooterBloom {
     * random keys; any keys work — they ride in the footer). The write-side
     * probe count follows fp, matching the crate's writer at any fp.
     */
-  def forCapacity(capacity: Long, seed: String, fp: Double = 0.01): FooterBloom = {
+  def forCapacity(capacity: Long, seed: String, fp: Double = 0.01): FooterBloom =
+    new FooterBloom(new Array[Byte](bitmapBytes(capacity, fp)), keysFor(seed),
+      capacity, writeK = kForFp(fp))
+
+  /** The sip keys [[forCapacity]] derives from `seed`. */
+  private[pipeline] def keysFor(seed: String): (Long, Long, Long, Long) = {
     val sb = seed.getBytes("UTF-8")
     def k(i: Int): Long = SipHash.hash24(0x6772616674626c6dL, i.toLong, sb)
-    new FooterBloom(new Array[Byte](bitmapBytes(capacity, fp)),
-      (k(0), k(1), k(2), k(3)), capacity, writeK = kForFp(fp))
+    (k(0), k(1), k(2), k(3))
   }
+
+  /** An item in Rust's `Vec<u8>` `Hash` framing: 8-byte little-endian
+    * length, then the bytes.
+    */
+  private[pipeline] def framed(item: Array[Byte]): Array[Byte] = {
+    val out = new Array[Byte](8 + item.length)
+    val n = item.length.toLong
+    var j = 0
+    while (j < 8) { out(j) = ((n >>> (8 * j)) & 0xff).toByte; j += 1 }
+    System.arraycopy(item, 0, out, 8, item.length)
+    out
+  }
+
+  /** Base hash `which` (0 or 1) of a framed item under `keys`: h0 and h1,
+    * the two that [[FooterBloom.addHashes]] takes.
+    */
+  private[pipeline] def sip(keys: (Long, Long, Long, Long), which: Int, framed: Array[Byte]): Long =
+    if (which == 0) SipHash.hash13(keys._1, keys._2, framed)
+    else SipHash.hash13(keys._3, keys._4, framed)
 
   /** Parse from a footer KV map; None when any of the three keys is
     * absent or malformed (callers fall back to scanning).

@@ -23,20 +23,23 @@ import scala.jdk.CollectionConverters._
   * column bloom filters and hash range predicates, which the scan applies
   * automatically.
   *
-  * WRITE: Spark's public Parquet writer can't append custom footer KVs, so
+  * WRITE: the catalog is known only once the whole write has run, so
   * after a build one finalize ([[stamp]]) rewrites each file's footer in
   * place — parse the thrift `FileMetaData`, append the `shaha:*` catalog
-  * entries and, when asked, the `shaha:bloom_*` footer bloom, serialize,
-  * splice (data pages, bloom filters and column-index offsets are
-  * untouched: only the trailing footer + length + magic are replaced, via
-  * a filesystem-API copy so checksum files stay consistent). A finalize is
-  * one file listing, one footer read per file, at most one distributed
-  * bitmap job over the `hash` column, and one splice per file: on an
-  * object store, where a splice copies the whole object, a bloom-stamped
-  * build rewrites each data file once. The reference CLI's metadata fast
-  * path (parquet.rs:152-202) then reads graft output directly. Each file
-  * records ITS OWN row count (the read side sums), with the dataset-wide
-  * algorithm/source lists — same merge semantics in both directions.
+  * entries, serialize, splice (data pages, bloom filters and column-index
+  * offsets are untouched: only the trailing footer + length + magic are
+  * replaced, via a filesystem-API copy so checksum files stay
+  * consistent). The `shaha:bloom_*` footer bloom of a build is already in
+  * the footer: the writer puts it there ([[BloomParquetFormat]]). A build's
+  * finalize is one file listing, one footer read per file and one splice
+  * per file: on an object store, where a splice copies the whole object, a
+  * bloom-stamped build rewrites each data file once. [[writeBlooms]]
+  * re-stamps blooms on databases written without them (reference-built or
+  * older graft output) with one distributed bitmap job over the `hash`
+  * column. The reference CLI's metadata fast path (parquet.rs:152-202)
+  * then reads graft output directly. Each file records ITS OWN row count
+  * (the read side sums), with the dataset-wide algorithm/source lists —
+  * same merge semantics in both directions.
   *
   * Footer reads/rewrites happen driver-side, one small ranged read (plus,
   * for writes, one streaming copy) per file, fanned out on the JVM's
@@ -167,7 +170,7 @@ object FooterMeta {
     */
   def writeBlooms(
       spark: SparkSession, db: String,
-      minCapacity: Long = 100000, fp: Double = 0.01
+      minCapacity: Long = FooterBloom.MinCapacity, fp: Double = FooterBloom.Fp
   ): Int = stamp(spark, db, None, blooms = true, minCapacity, fp).bloomed
 
   /** What one [[stamp]] found and wrote: the data files, their summed
@@ -175,9 +178,10 @@ object FooterMeta {
     */
   private[pipeline] final case class Stamped(files: Int, records: Long, bloomed: Int)
 
-  /** The footer finalize of a build or a compaction: the `shaha:*` catalog
-    * (when `meta` is given) and the footer bloom (when `blooms`) go into
-    * each file's footer in ONE splice per file.
+  /** The footer finalize: the `shaha:*` catalog (when `meta` is given)
+    * and the footer bloom (when `blooms`) go into each file's footer in ONE
+    * splice per file. Builds and compactions pass only the catalog: their
+    * writer stamped the blooms.
     *
     * Each bloom is sized from its file's footer `num_rows` (at least
     * `minCapacity`), so no counting job runs. The bitmaps are built
@@ -188,7 +192,7 @@ object FooterMeta {
     */
   private[pipeline] def stamp(
       spark: SparkSession, db: String, meta: Option[SidecarMeta], blooms: Boolean,
-      minCapacity: Long = 100000, fp: Double = 0.01
+      minCapacity: Long = FooterBloom.MinCapacity, fp: Double = FooterBloom.Fp
   ): Stamped = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(db)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.functions._
 import graft.core.Hashers
-import graft.sql.expressions.Digest
+import graft.sql.expressions.{Digest, HashTile}
 
 /** Column-level function surface of the engine (SURVEY.md §7 step 3). */
 object functions {
@@ -62,6 +62,15 @@ object functions {
     require(hexStr.matches("(?i)[0-9a-f]*"), s"invalid hex: $hexStr")
     hexStr.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
   }
+
+  /** A row's tile among `n` ordered slices of the (algorithm rank, hash)
+    * space: `rank` is the row's index in a sorted list of `ranks`
+    * algorithms (`lit(0)` and 1 for one slice set over all algorithms).
+    * See [[graft.sql.expressions.HashTile]].
+    */
+  def hashTile(hash: Column, rank: Column, n: Int, ranks: Int): Column =
+    GraftShim.column(HashTile(GraftShim.expression(hash),
+      GraftShim.expression(rank.cast("int")), n, ranks))
 
   /** Word→records expansion (reference src/cli/build.rs:353-366): one input
     * word fans out to one `(hash, preimage, algorithm, sources)` struct per

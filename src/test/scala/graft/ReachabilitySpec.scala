@@ -37,7 +37,7 @@ class ReachabilitySpec extends AnyFunSuite {
   private val allowed = Map(
     "StreamingBuild.runWatermarked" ->
       ("the bounded-state streaming build behind aim 3's crash/restart " +
-        "claim (ROADMAP item 4 keeps it); StreamingSpec drives it"),
+        "claim; StreamingSpec drives it"),
     "StreamingDrift.compactCounts" ->
       ("the crash-safe staged-swap compaction of the count log (CountLog) " +
         "behind aim 3's restart claim; StreamingDriftSpec drives it"),
@@ -48,9 +48,9 @@ class ReachabilitySpec extends AnyFunSuite {
       ("test hook for unconverged loop exits until ROADMAP item 2 " +
         "replaces the channel with observed metrics"),
     "Compact.run" ->
-      ("small-file compaction of a built hash db, which ROADMAP item 1's " +
-        "tiled layout keeps; CompactSpec, FooterBloomSpec and " +
-        "ObjectStoreSpec drive it"),
+      ("file-count compaction of a built hash db into the build's own " +
+        "digest-prefix tiled layout over fewer tiles; CompactSpec, " +
+        "FooterBloomSpec and ObjectStoreSpec drive it"),
     "StdinSource.name" -> ThroughTrait,
     "StdinSource.words" -> ThroughTrait,
     "StdinSource.contentHash" -> ThroughTrait,

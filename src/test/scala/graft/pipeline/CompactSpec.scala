@@ -10,10 +10,11 @@ class CompactSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val out = java.nio.file.Files.createTempDirectory("graft-compact")
       .toString + "/db"
-    // a deliberately fragmented build: 1 record per file
+    // a deliberately fragmented build: 30 digest-prefix tiles of ~10
+    // records, one file each
     val words = (0 until 300).map(i => f"word-$i%04d").toDS()
-    val cfg = BuildJob.Config(algorithms = Seq("md5"),
-      maxRecordsPerFile = 10L, numFiles = Some(30), bloomNdv = 1000L)
+    val cfg = BuildJob.Config(algorithms = Seq("md5"), numFiles = Some(30),
+      bloomNdv = 1000L)
     val res = BuildJob.run(spark, words, out, cfg, contentHash = Some("c1"))
     assert(res.written && res.records == 300)
 

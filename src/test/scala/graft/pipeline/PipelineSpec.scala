@@ -144,45 +144,58 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
-  test("job-count gate: a fresh 2-algorithm bloom-stamped build runs 6 Spark jobs") {
-    // Pass by pass, with AQE on (the session default):
-    //   1    K3: LIMIT-1 scan of the word list for a non-blank word
-    //   2-5  the write: distinct shuffle stage, range-partitioner sampling,
-    //        range shuffle stage, then the write's result stage, which also
-    //        observes the catalog stats (count, algorithms, sources)
-    //   6    footer bloom bitmaps over the written `hash` column
-    // No job re-scans the written db for stats or counts rows to size the
-    // blooms, and no emptiness check runs the distinct.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  /** Spark jobs `f` runs, counted by job group. The status store is fed
+    * asynchronously, so the count is read until it settles.
+    */
+  private def jobsOf(group: String)(f: => Unit): Int = {
     val sc = spark.sparkContext
-    val group = "build-job-audit"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    // count only this thread's job group: stray jobs from other specs on
-    // the shared session must not count
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.add(j.stageInfos.map(_.name).mkString(" | "))
+    sc.setJobGroup(group, group)
+    try f finally sc.clearJobGroup()
+    var seen = -1
+    var now = sc.statusTracker.getJobIdsForGroup(group).length
+    while (seen != now) {
+      seen = now
+      Thread.sleep(300)
+      now = sc.statusTracker.getJobIdsForGroup(group).length
     }
+    now
+  }
+
+  test("job-count gate: a fresh 2-algorithm bloom-stamped build runs 4 Spark " +
+      "jobs, an append onto it 3") {
+    // Pass by pass, with AQE on (the session default). Fresh build:
+    //   1  K3: LIMIT-1 scan of the word list for a non-blank word
+    //   2  the distinct's shuffle stage
+    //   3  the tile shuffle stage, fed by the digest fan-out; the tiles are
+    //      fixed by the digest prefix, so no range-sampling job runs
+    //   4  the write's result stage: it observes the catalog stats (count,
+    //      algorithms, sources), and the writer stamps each file's footer
+    //      bloom as it closes the file
+    // Append: its catalog has records, so no K3 scan; then the distinct, one
+    // tile shuffle of the old rows and the new, and the write stage, which
+    // also merges each tile's runs of equal keys.
+    // No job re-scans the written db for stats, counts rows to size the
+    // blooms, or reads the hash column back to build them.
     val dir = tmp()
     val list = java.nio.file.Paths.get(dir, "words.txt")
+    val more = java.nio.file.Paths.get(dir, "more.txt")
     Files.write(list, (0 until 500).map(i => s"job-$i").asJava)
+    Files.write(more, (250 until 750).map(i => s"job-$i").asJava)
+    val cfg = BuildJob.Config(Seq("md5", "sha256"), footerBloom = true)
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "one fresh build")
     try {
-      assert(BuildJob.run(spark, spark.read.textFile(list.toString), dir + "/db",
-        BuildJob.Config(Seq("md5", "sha256"), footerBloom = true)).records == 1000)
-      // the listener bus is asynchronous: wait until the count settles
-      var seen = -1
-      while (seen != jobs.size) { seen = jobs.size; Thread.sleep(500) }
-      assert(jobs.size <= 6, jobs.toArray.mkString(s"${jobs.size} jobs:\n", "\n", ""))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
+      val fresh = jobsOf("build-job-audit-fresh") {
+        assert(BuildJob.run(spark, spark.read.textFile(list.toString), dir + "/db", cfg)
+          .records == 1000)
+      }
+      assert(fresh <= 4, s"$fresh jobs for a fresh build")
+      val append = jobsOf("build-job-audit-append") {
+        assert(BuildJob.run(spark, spark.read.textFile(more.toString), dir + "/db",
+          cfg.copy(sourceName = "more", append = true)).records == 1500)
+      }
+      assert(append <= 3, s"$append jobs for an append")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("incremental build skips an already-ingested source (build.rs:113-125)") {

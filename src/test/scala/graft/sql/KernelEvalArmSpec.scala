@@ -45,7 +45,10 @@ class KernelEvalArmSpec extends AnyFunSuite with SparkTestBase {
       functions.digest("md5", s),
       functions.digest("blake3", s),
       k(FloatVecDot(ve, ve)),
-      k(FloatMatVec(ve, Array(1.0, -1.0, 0.5, 2.0, 0.0, 1.0), 2)))
+      k(FloatMatVec(ve, Array(1.0, -1.0, 0.5, 2.0, 0.0, 1.0), 2)),
+      // 0-, 1- and many-byte hashes; ranks past the last one clamp
+      k(HashTile(GraftShim.expression(s.cast("binary")),
+        GraftShim.expression(length(s)), 5, 3)))
   }
 
   private def rows(): Seq[Seq[Any]] = {
